@@ -155,7 +155,7 @@ def main() -> None:
     ap.add_argument("--entity", default="event", help="entity for file mode")
     ap.add_argument(
         "--all-entities", action="store_true",
-        help="run the full 13-entity demux -> validate -> union topology",
+        help="run the full 13-entity validate-and-route in one pass",
     )
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--type-pattern", default="(?i)^event$")

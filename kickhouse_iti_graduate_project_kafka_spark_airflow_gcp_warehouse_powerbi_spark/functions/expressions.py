@@ -20,7 +20,7 @@ Semantics preserved exactly (SURVEY.md "hard parts"):
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from functools import reduce
 
 from pyspark.sql import Column
@@ -74,16 +74,23 @@ def composite_pk(cols: Sequence[str | Column], sep: str = "|") -> Column:
     return F.concat_ws(sep, *parts)
 
 
-def payload_hash(cols: Sequence[str], exclude: Sequence[str] = ()) -> Column:
+def payload_hash(
+    cols: Sequence[str],
+    exclude: Sequence[str] = (),
+    field: Callable[[str], Column] = F.col,
+) -> Column:
     """sha2-256 of the canonical JSON of the business columns.
 
     Canonical form = columns sorted by name, serialized with
     ``to_json(struct(...))`` (reference: validate_json.py:532-537, 567-576).
     Envelope columns (kafka metadata, derived flags) are excluded.
+    ``field`` maps a name to the column read, which must resolve to that
+    name (default: the top-level column; the validator reads the fields of
+    a parsed payload struct).
     """
     excluded = set(exclude)
     ordered = sorted(c for c in cols if c not in excluded)
-    return F.sha2(F.to_json(F.struct(*[F.col(c) for c in ordered])), 256)
+    return F.sha2(F.to_json(F.struct(*[field(c) for c in ordered])), 256)
 
 
 def repair_ingested_at(
@@ -100,13 +107,16 @@ def repair_ingested_at(
     return F.coalesce(plausible, from_kafka, F.unix_timestamp(F.current_timestamp()).cast("double"))
 
 
-def required_fields_ok(required: Sequence[str]) -> Column:
+def required_fields_ok(
+    required: Sequence[str], field: Callable[[str], Column] = F.col
+) -> Column:
     """AND-fold of ``isNotNull`` over the per-entity required column list
     (reference: validate_json.py:497-515, 551-554). Tri-state safe: isNotNull
-    never yields NULL, so the fold is a true boolean."""
+    never yields NULL, so the fold is a true boolean. ``field`` as in
+    :func:`payload_hash`."""
     if not required:
         return F.lit(True)
-    return reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in required])
+    return reduce(lambda a, b: a & b, [field(c).isNotNull() for c in required])
 
 
 def sport_ok(col: str | Column, pattern: str = "(?i)soccer") -> Column:

@@ -1,5 +1,6 @@
-"""The 13-entity demux → validate → union fold topology (reference job
-shape, validate_json.py:582-652) driven over a mixed-topic stream."""
+"""The 13-entity validate-and-route (reference job: demux → validate →
+union fold, validate_json.py:582-652; here one pass) driven over a
+mixed-topic stream."""
 
 import json
 import os
