@@ -1,10 +1,15 @@
 #!/usr/bin/env python
-"""Job: run the streaming validate-and-route pipeline.
+"""Job: run the streaming 13-entity validate-and-route pipeline.
+
+Every message on a ``soccer.*`` topic is validated against its own entity's
+schema, keys and sport rule (``validate_all_entities``), deduped, and routed
+by ONE streaming query to ``validated.<topic>`` or ``rejected.<topic>``.
 
 Kafka mode (production):
     python jobs/validate_stream.py --kafka broker:9092 --checkpoint /chk
-File mode (dev/test, no broker):
-    python jobs/validate_stream.py --source-dir /data/envelopes --checkpoint /chk
+File mode (dev/test, no broker; memory table ``job_routed`` with the views
+``job_validated`` / ``job_rejected``, whose counts ``--run-for`` prints):
+    python jobs/validate_stream.py --source-dir /data/envelopes --checkpoint /chk --run-for 0
 Broker smoke test (self-skipping):
     python jobs/validate_stream.py --kafka broker:9092 --smoke --checkpoint /chk
 
@@ -36,17 +41,11 @@ from pyspark.sql import types as T
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark import get_spark
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.schemas import (
     PRIMARY_KEYS,
-    REQUIRED_FIELDS,
-    SPORT_FIELD,
-    entity_schema,
 )
-from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming import (
+from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.validate import (
     file_json_source,
     kafka_source,
     start_validated_rejected_sinks,
-    validate_messages,
-)
-from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.validate import (
     validate_all_entities,
 )
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.monitor import (
@@ -152,13 +151,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--kafka", help="bootstrap servers (Kafka mode)")
     ap.add_argument("--source-dir", help="JSON envelope dir (file mode)")
-    ap.add_argument("--entity", default="event", help="entity for file mode")
-    ap.add_argument(
-        "--all-entities", action="store_true",
-        help="run the full 13-entity validate-and-route in one pass",
-    )
     ap.add_argument("--checkpoint", required=True)
-    ap.add_argument("--type-pattern", default="(?i)^event$")
     ap.add_argument(
         "--run-for", type=float, default=None,
         help="seconds to run before draining and stopping (dev/file mode); "
@@ -188,26 +181,17 @@ def main() -> None:
         msgs = file_json_source(spark, args.source_dir, ENVELOPE)
     else:
         ap.error("one of --kafka / --source-dir is required")
-    if args.all_entities:
-        routed = validate_all_entities(msgs)
-    else:
-        routed = validate_messages(
-            msgs,
-            entity_schema(args.entity),
-            REQUIRED_FIELDS[args.entity],
-            args.type_pattern,
-            pk_cols=PRIMARY_KEYS[args.entity],
-            sport_field=SPORT_FIELD.get(args.entity),
-        )
     queries = start_validated_rejected_sinks(
-        routed, args.checkpoint, kafka_bootstrap=args.kafka, memory_prefix="job"
+        validate_all_entities(msgs), args.checkpoint,
+        kafka_bootstrap=args.kafka, memory_prefix="job",
     )
     if args.run_for is not None:
         for q in queries:
             q.processAllAvailable()
-        for name in ("job_validated", "job_rejected"):
-            n = spark.sql(f"SELECT COUNT(*) AS n FROM {name}").collect()[0]["n"]
-            print(f"{name}: {n} rows")
+        if not args.kafka:  # the memory views exist only in file mode
+            for name in ("job_validated", "job_rejected"):
+                n = spark.sql(f"SELECT COUNT(*) AS n FROM {name}").collect()[0]["n"]
+                print(f"{name}: {n} rows")
         for q in queries:
             q.stop()
         return

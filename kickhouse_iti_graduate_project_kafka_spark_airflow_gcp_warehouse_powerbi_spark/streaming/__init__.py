@@ -3,7 +3,6 @@ from .monitor import ProgressLogger, attach  # noqa: F401
 from .validate import (  # noqa: F401
     file_json_source,
     kafka_source,
-    routed_stream,
     start_validated_rejected_sinks,
     validate_messages,
 )

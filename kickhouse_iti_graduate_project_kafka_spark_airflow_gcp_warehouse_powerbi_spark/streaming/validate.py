@@ -10,12 +10,15 @@ drivers", SURVEY.md §3.2), with the improvements SURVEY.md §3.1 calls out:
 - the reference's 13 per-entity branches (each re-reading the stream,
   each with its own dedup state) run as one pass: one parse per message,
   one watermark, one dedup operator (:func:`validate_all_entities`);
-- AQE left on; checkpointed sinks; 5 s processing-time trigger kept;
+- one checkpointed query writes both the validated and the rejected leg:
+  each row's routed ``topic`` picks its output topic
+  (:func:`start_validated_rejected_sinks`);
+- AQE left on; 5 s processing-time trigger kept;
 - a StreamingQueryListener instead of a status-polling thread
   (validate_json.py:686-700).
 
 Source/sink factories support Kafka (production) and file/memory
-(tests — this container has no broker). The Kafka paths use the exact
+(tests and brokerless dev runs). The Kafka paths use the exact
 option surface of the reference: subscribePattern with negative lookahead,
 earliest offsets, failOnDataLoss=false, idempotent producer
 (validate_json.py:540-547, 676-680).
@@ -283,11 +286,6 @@ def validate_all_entities(
     return out.drop("entity")
 
 
-def routed_stream(routed: DataFrame, valid: bool) -> DataFrame:
-    """Split one routed frame into the validated or rejected leg."""
-    return routed.filter(F.col("is_valid") == valid).drop("is_valid", "parse_ok")
-
-
 def start_validated_rejected_sinks(
     routed: DataFrame,
     checkpoint_root: str,
@@ -295,26 +293,39 @@ def start_validated_rejected_sinks(
     memory_prefix: str | None = None,
     trigger: str = DEFAULT_TRIGGER,
 ) -> list[StreamingQuery]:
-    """S2/S3: two sinks (validated-all, rejected-all), per-row topic routing,
-    idempotent produce, per-query checkpoints (reference:
-    validate_json.py:667-683). With ``memory_prefix`` the sinks are memory
-    tables for tests."""
-    queries = []
-    for name, leg in (("validated", True), ("rejected", False)):
-        df = routed_stream(routed, leg)
-        writer = (
-            df.writeStream.outputMode("append")
-            .trigger(processingTime=trigger)
-            .option("checkpointLocation", f"{checkpoint_root}/{name}")
-            .queryName(f"{memory_prefix or 'route'}_{name}")
+    """S2/S3: ONE streaming query writes both legs, checkpointed at
+    ``<checkpoint_root>/routed``. Each row's routed ``topic``
+    (``validated.*`` or ``rejected.*``) picks its Kafka topic, as in the
+    reference's single writeStream (validate_json.py:608-641, 667-683); the
+    producer is idempotent. The source is read, parsed and deduped once.
+
+    Without ``kafka_bootstrap`` (tests, no broker) the query writes the
+    memory table ``<prefix>_routed`` (``prefix`` = ``memory_prefix``, else
+    ``route``); ``<prefix>_validated`` and ``<prefix>_rejected`` are temp
+    views over it, split on the topic prefix, with columns (topic, key,
+    value, payload_sha, evt_ts).
+
+    Returns the one query in a list."""
+    prefix = memory_prefix or "route"
+    writer = (
+        routed.drop("is_valid", "parse_ok")
+        .writeStream.outputMode("append")
+        .trigger(processingTime=trigger)
+        .option("checkpointLocation", f"{checkpoint_root}/routed")
+        .queryName(f"{prefix}_routed")
+    )
+    if kafka_bootstrap:
+        return [
+            writer.format("kafka")
+            .option("kafka.bootstrap.servers", kafka_bootstrap)
+            .option("kafka.enable.idempotence", "true")
+            .start()
+        ]
+    query = writer.format("memory").start()
+    spark = routed.sparkSession
+    for leg in ("validated", "rejected"):
+        spark.sql(
+            f"CREATE OR REPLACE TEMP VIEW {prefix}_{leg} AS "
+            f"SELECT * FROM {prefix}_routed WHERE startswith(topic, '{leg}.')"
         )
-        if kafka_bootstrap:
-            writer = (
-                writer.format("kafka")
-                .option("kafka.bootstrap.servers", kafka_bootstrap)
-                .option("kafka.enable.idempotence", "true")
-            )
-        else:
-            writer = writer.format("memory")
-        queries.append(writer.start())
-    return queries
+    return [query]

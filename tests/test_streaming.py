@@ -3,7 +3,9 @@ foreachBatch silver maintenance — file/memory sources so no broker is
 needed (SURVEY.md §5 item 3)."""
 
 import json
+import os
 import shutil
+import sys
 import tempfile
 
 import pytest
@@ -11,6 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.fixtures import (
+    entity_fixtures,
+)
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.operators.latest import (
     latest_per_key,
 )
@@ -20,9 +25,13 @@ from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_sp
     read_silver,
     write_batch_idempotent,
 )
+from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.monitor import (
+    attach,
+)
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.validate import (
     file_json_source,
     start_validated_rejected_sinks,
+    validate_all_entities,
     validate_messages,
 )
 
@@ -139,6 +148,115 @@ def test_streaming_validate_route_and_dedup(spark, tmpdir):
     sha_keys = [r["key"] for r in rejected if len(r["key"] or "") == 64]
     assert len(sha_keys) == 2
     assert expected  # documented intent
+
+
+def _entity_envelopes(resend: bool = False) -> list[str]:
+    """One JSON envelope line per fixture document of all 13 entities plus
+    one corrupt message. ``resend`` stamps a fresh ingested_at on every
+    document (a producer re-send: same payload, dropped by dedup) and
+    varies the corrupt text (a new row)."""
+    lines = []
+    for entity, docs in entity_fixtures().items():
+        for doc in docs:
+            if resend:
+                doc = {**doc, "ingested_at": doc["ingested_at"] + 3600}
+            lines.append(json.dumps({"topic": f"soccer.{entity}", "key": None,
+                                     "value": json.dumps(doc),
+                                     "timestamp": "2026-01-01T00:00:00.000Z"}))
+    corrupt = '{"idEvent": "resent"' if resend else '{"idEvent": "x"'
+    lines.append(json.dumps({"topic": "soccer.event", "key": None, "value": corrupt,
+                             "timestamp": "2026-01-01T00:00:00.000Z"}))
+    return lines
+
+
+def _batch_topic_counts(spark, src: str) -> dict[str, int]:
+    """Per-topic routed counts of the batch 13-entity topology over ``src``."""
+    routed = validate_all_entities(spark.read.schema(ENVELOPE).json(src))
+    return {r["topic"]: r["count"] for r in routed.groupBy("topic").count().collect()}
+
+
+def test_one_query_routes_both_legs(spark, tmpdir):
+    """Both legs come from ONE streaming query that reads each message once;
+    the validated/rejected views over its memory table see rows appended
+    after they were created and match the batch topology."""
+    src, stage = f"{tmpdir}/src", f"{tmpdir}/stage"
+    os.makedirs(src)
+    os.makedirs(stage)
+    stream = file_json_source(spark, src, ENVELOPE, max_files=1)
+    queries = start_validated_rejected_sinks(
+        validate_all_entities(stream), f"{tmpdir}/chk",
+        memory_prefix="one", trigger="100 milliseconds",
+    )
+    landed = 0
+    try:
+        assert len(queries) == 1
+        (q,) = queries
+        for i, resend in enumerate((False, True)):
+            lines = _entity_envelopes(resend)
+            with open(f"{stage}/b{i}.json", "w") as f:
+                f.write("\n".join(lines) + "\n")
+            os.rename(f"{stage}/b{i}.json", f"{src}/b{i}.json")
+            landed += len(lines)
+        q.processAllAvailable()
+        got = {}
+        for leg in ("validated", "rejected"):
+            df = spark.table(f"one_{leg}")
+            assert df.columns == ["topic", "key", "value", "payload_sha", "evt_ts"]
+            for r in df.groupBy("topic").count().collect():
+                assert r["topic"].startswith(f"{leg}.")
+                got[r["topic"]] = r["count"]
+        progress = [json.loads(p.json) for p in q.recentProgress]
+        progress = [p for p in progress if p["numInputRows"]]
+    finally:
+        for q in queries:
+            q.stop()
+
+    assert got == _batch_topic_counts(spark, src)
+    # the source is read once per message, not once per leg
+    assert sum(p["numInputRows"] for p in progress) == landed
+    # two data batches, each adding rows to the views
+    assert len(progress) == 2
+    assert all(p["sink"]["numOutputRows"] > 0 for p in progress)
+
+
+def test_validate_stream_job_routes_all_entities(spark, tmpdir, monkeypatch, capsys):
+    """The job's only mode is the 13-entity topology: in file mode every
+    entity validates against its own schema, so the validated count
+    equals the batch topology's."""
+    jobs = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs")
+    monkeypatch.syspath_prepend(jobs)
+    import validate_stream
+
+    src = f"{tmpdir}/src"
+    os.makedirs(src)
+    with open(f"{src}/all.json", "w") as f:
+        f.write("\n".join(_entity_envelopes()) + "\n")
+    # the job's get_spark reuses this session: keep its partition count
+    monkeypatch.setenv("SPARK_SHUFFLE_PARTITIONS", spark.conf.get("spark.sql.shuffle.partitions"))
+    # and detach its progress listener afterwards
+    listeners = []
+    monkeypatch.setattr(validate_stream, "attach", lambda s: listeners.append(attach(s)))
+    monkeypatch.setattr(sys, "argv", ["validate_stream.py", "--source-dir", src,
+                                      "--checkpoint", f"{tmpdir}/chk", "--run-for", "0"])
+    try:
+        validate_stream.main()
+    finally:
+        for listener in listeners:
+            spark.streams.removeListener(listener)
+
+    # lines "job_<leg>: <n> rows"
+    printed = {
+        name: int(rest.split()[0])
+        for name, rest in (
+            line.split(": ") for line in capsys.readouterr().out.splitlines()
+            if line.startswith("job_")
+        )
+    }
+    want = _batch_topic_counts(spark, src)
+    for leg in ("validated", "rejected"):
+        assert printed[f"job_{leg}"] == sum(
+            n for t, n in want.items() if t.startswith(f"{leg}.")
+        )
 
 
 def test_batch_and_streaming_share_transform(spark, tmpdir):
