@@ -10,7 +10,8 @@ text analysis, multimodal columns).
 Layout
 ------
 - ``session``    : SparkSession factory (AQE on, UTC, sane shuffle conf)
-- ``sources``    : parquet/kafka/json readers & sinks, table registry
+- ``sources``    : parquet/kafka/json readers & sinks, table registry,
+                   parts tables, storage I/O (local/Hadoop backends)
 - ``functions``  : scalar expression library (pk, payload hash, ts repair,
                    validity predicates, text metrics, vector math)
 - ``operators``  : latest-per-key, dedup (exact/minhash/simhash/jaccard),
@@ -18,8 +19,8 @@ Layout
 - ``plans``      : named query plans (TPC-H-ish OLAP, DQ suite, warehouse
                    builds) — each registered in ``catalog`` with a DuckDB
                    oracle for the correctness gate
-- ``streaming``  : structured-streaming validator & incremental warehouse
-                   maintenance (foreachBatch)
+- ``streaming``  : structured-streaming validator & foreachBatch sinks
+                   into parts tables and sketches
 """
 
 __version__ = "0.1.0"

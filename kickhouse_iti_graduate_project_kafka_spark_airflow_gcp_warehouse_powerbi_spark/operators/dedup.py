@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint64, shingles_from_tokens, tokens
+from ..sources.storage import HadoopIO
 
 # ---------------------------------------------------------------------------
 # Persist lifecycle: delegated to the shared operators/cachereg.py registry
@@ -1452,41 +1453,6 @@ def absorb_batch_into_index(
     return stats
 
 
-class _IndexFs:
-    """Scheme-agnostic directory ops for the index lifecycle, routed
-    through the Hadoop ``FileSystem`` API via the session JVM (the same
-    posture as ``streaming/maintenance._HadoopManifestIO`` and
-    ``sources/gold_layout.compact_partitions``): ``os.rename``/
-    ``shutil.rmtree`` only work on the local filesystem, while index
-    paths can be ``hdfs://``/``s3a://`` like every other path here."""
-
-    def __init__(self, spark):
-        self._jvm = spark._jvm
-        self._conf = spark._jsc.hadoopConfiguration()
-
-    def _jp(self, p: str):
-        return self._jvm.org.apache.hadoop.fs.Path(p)
-
-    def _fs(self, p: str):
-        return self._jp(p).getFileSystem(self._conf)
-
-    def exists(self, p: str) -> bool:
-        return bool(self._fs(p).exists(self._jp(p)))
-
-    def rename(self, src: str, dst: str) -> None:
-        # plain FileSystem.rename: atomic dir move on HDFS/local; refuses
-        # an existing destination, which is exactly what we want — every
-        # swap step below renames onto a path proven absent.
-        if not self._fs(src).rename(self._jp(src), self._jp(dst)):
-            raise OSError(f"rename failed: {src} -> {dst}")
-
-    def rmtree(self, p: str) -> None:
-        fs = self._fs(p)
-        jp = self._jp(p)
-        if fs.exists(jp):
-            fs.delete(jp, True)
-
-
 def compact_dedup_index(spark, path: str, target_rows_per_file: int = 4_000_000) -> dict:
     """Offline maintenance for an absorb-grown index (the MergeTree-merge
     analogue): rewrite each table's accumulated per-batch file sets into
@@ -1504,9 +1470,11 @@ def compact_dedup_index(spark, path: str, target_rows_per_file: int = 4_000_000)
     only AFTER the live dir is confirmed present. Re-running therefore
     converges from any crash point without a window in which the only
     copies of the table are staged. All directory ops route through the
-    Hadoop ``FileSystem`` API, so the swap works on any scheme the
-    session can reach, not just the local filesystem."""
-    fs = _IndexFs(spark)
+    Hadoop ``FileSystem`` backend of :mod:`..sources.storage`, so the
+    swap works on any scheme the session can reach, not just the local
+    filesystem; every swap step below renames onto a path proven
+    absent."""
+    fs = HadoopIO(spark)
     out = {}
     for tbl in ("fingerprints", "shingles", "sizes", "doc_ids"):
         src_dir = f"{path}/{tbl}"

@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.storage import rmtree
+
 
 def _ids_frame(ids: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     return (
@@ -71,13 +73,6 @@ def _delete_set(ids: DataFrame, limit: int | None = None) -> DataFrame:
     n_limit = BROADCAST_IDS_LIMIT if limit is None else limit
     n = ids.limit(n_limit + 1).count()
     return F.broadcast(ids) if n <= n_limit else ids
-
-
-def _rmtree(spark: SparkSession, path: str) -> None:
-    from ..streaming.maintenance import _io_for
-
-    io, p = _io_for(path)
-    io.rmtree(p)
 
 
 def _delete_from_partitioned(
@@ -132,7 +127,7 @@ def _delete_from_partitioned(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     emptied = [p for p in parts if p not in live]
     for p in emptied:
-        _rmtree(spark, f"{table}/{part_col}={p}")
+        rmtree(f"{table}/{part_col}={p}")
     return {
         "partitions_rewritten": len(live),
         "partitions_dropped": len(emptied),
@@ -335,7 +330,7 @@ def vacuum_dedup_index(spark: SparkSession, path: str) -> dict:
         remaining = src.join(_delete_set(fp_ts), "_fp", "left_anti").localCheckpoint()
         remaining.write.mode("overwrite").parquet(f"{path}/fingerprints")
     for tbl in ("id_tombstones", "fp_tombstones"):
-        _rmtree(spark, f"{path}/{tbl}")
+        rmtree(f"{path}/{tbl}")
     return {"vacuumed": int(n)}
 
 

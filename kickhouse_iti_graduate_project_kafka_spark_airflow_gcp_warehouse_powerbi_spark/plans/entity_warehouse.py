@@ -4,8 +4,8 @@ Re-expresses the ClickHouse warehouse DDL (ClickHouse Data Warehouse
 Creation + Backfill DDLs.txt: dims 16-101, facts 115-226, MVs 229-439, hub
 view 447-470) as DataFrame builders over validated entity frames. Each
 builder is a pure function `dict[entity -> DataFrame] -> DataFrame`, shared
-by the batch backfill and foreachBatch incremental maintenance
-(streaming/maintenance.py) — one transform, two drivers.
+by the batch backfill and a foreachBatch stream into a parts table
+(streaming/parts_stream.py) — one transform, two drivers.
 
 Operator coverage: W1 soccer filter, W2 xxhash64 surrogate keys, W3 zero-FK
 NULL-ing, W4 rename/projection, W5 league_ids array flattening, W6

@@ -18,6 +18,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .storage import io_for, join
+
 
 def write_gold(
     df: DataFrame,
@@ -60,7 +62,7 @@ def compact_partitions(
 
     Uses dynamic partition overwrite (only partitions present in the
     rewritten frame are replaced — concurrent writers to OTHER partitions
-    are untouched), the same idempotence machinery as the silver sink.
+    are untouched).
     ``predicate`` restricts the sweep (e.g. ``"month >= '2026-01'"``) so a
     100 TB table compacts incrementally, newest partitions first.
 
@@ -136,17 +138,17 @@ def retention_sweep(
 
     Deleting directories (not rows) keeps the sweep metadata-only: no
     rewrite of surviving data, no tombstones — at 100 TB retention must
-    never cost a table scan.
+    never cost a table scan. Listing and deletes go through
+    :mod:`.storage`, so ``file:``/``hdfs://``/``s3a://`` tables sweep like
+    local ones.
     """
-    import os
-    import shutil
-
+    io, base = io_for(path)
     dropped = []
-    for entry in sorted(os.listdir(path)):
+    for entry in sorted(io.list_names(base)):
         if "=" not in entry:
             continue
         col, _, value = entry.partition("=")
         if col == partition_col and value < min_keep_value:
-            shutil.rmtree(os.path.join(path, entry))
+            io.delete(join(io, base, entry))
             dropped.append(value)
     return {"dropped_partitions": dropped, "kept": min_keep_value}

@@ -21,8 +21,7 @@ the same contract:
   analogue of ClickHouse's single-replica part-commit.
 - **Replay-safe inserts.** An optional ``batch_id`` is recorded in the
   version log; a retried insert whose id is already committed is a no-op
-  (ClickHouse's insert-block dedup / Delta txnAppId, and the same pattern
-  as :mod:`..streaming.maintenance`).
+  (ClickHouse's insert-block dedup / Delta txnAppId).
 - **Merge-on-read FINAL.** ``engine="replacing"`` keeps, per key, the row
   with the MAX ``version_col`` — ClickHouse ReplacingMergeTree(ver)'s
   documented semantics: the version column dominates regardless of
@@ -76,8 +75,8 @@ executors); parts are ordinary partitioned parquet, so partition pruning
 and row-group skipping work inside every part; a FINAL read costs one
 hash shuffle by key over the union of live parts — exactly what a
 ReplacingMergeTree FINAL costs ClickHouse — and OPTIMIZE amortizes it to
-zero (``collapsed`` fast path). All FS mutations route through the same
-local/Hadoop backends as the silver manifest protocol, so ``hdfs://`` /
+zero (``collapsed`` fast path). All FS mutations route through the
+local/Hadoop backends of :mod:`.storage`, so ``hdfs://`` /
 ``viewfs://`` / ``s3a://`` paths behave identically to local ones.
 """
 
@@ -91,7 +90,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..streaming.maintenance import _io_for, _join
+from .storage import io_for, join
 
 TABLE_META = "table.json"
 SCHEMA_META = "schema.json"
@@ -212,10 +211,10 @@ def create_parts_table(
         or None,
         "sample_col": sample_col,
     }
-    io, base = _io_for(path)
-    io.mkdirs(_join(io, base, VERSIONS_DIR))
-    io.mkdirs(_join(io, base, PARTS_DIR))
-    existing = io.read_text(_join(io, base, TABLE_META))
+    io, base = io_for(path)
+    io.mkdirs(join(io, base, VERSIONS_DIR))
+    io.mkdirs(join(io, base, PARTS_DIR))
+    existing = io.read_text(join(io, base, TABLE_META))
     if existing is not None:
         # tables created before an engine was added lack its meta keys —
         # normalize with the defaults before comparing
@@ -238,14 +237,14 @@ def create_parts_table(
 
 
 def _load_meta(io, base: str) -> dict:
-    text = io.read_text(_join(io, base, TABLE_META))
+    text = io.read_text(join(io, base, TABLE_META))
     if text is None:
         raise FileNotFoundError(f"no parts table at {base} (missing {TABLE_META})")
     return json.loads(text)
 
 
 def _version_ids(io, base: str) -> list[int]:
-    d = _join(io, base, VERSIONS_DIR)
+    d = join(io, base, VERSIONS_DIR)
     out = []
     for name in io.list_names(d):
         if name.startswith("v") and name.endswith(".json"):
@@ -257,7 +256,7 @@ def _version_ids(io, base: str) -> list[int]:
 
 
 def _read_version(io, base: str, n: int) -> dict:
-    text = io.read_text(_join(io, base, VERSIONS_DIR, f"v{n}.json"))
+    text = io.read_text(join(io, base, VERSIONS_DIR, f"v{n}.json"))
     if text is None:
         raise FileNotFoundError(f"version {n} does not exist (or was vacuumed)")
     doc = json.loads(text)
@@ -268,7 +267,7 @@ def _read_version(io, base: str, n: int) -> dict:
 
 def current_version(path: str) -> int:
     """Latest committed version (0 = empty table)."""
-    io, base = _io_for(path)
+    io, base = io_for(path)
     ids = _version_ids(io, base)
     return max(ids) if ids else 0
 
@@ -276,7 +275,7 @@ def current_version(path: str) -> int:
 def table_history(path: str) -> list[dict]:
     """The retained commit log, oldest first: one dict per version with
     op / part count / batch ids — the ``DESCRIBE HISTORY`` analogue."""
-    io, base = _io_for(path)
+    io, base = io_for(path)
     out = []
     for n in _version_ids(io, base):
         doc = _read_version(io, base, n)
@@ -337,9 +336,9 @@ def insert_into_parts(
     before any data is written. ``app_id`` namespaces the ids (Delta's
     ``txnAppId``): a restarted stream whose checkpoint was RESET gets a
     fresh query id, so its restarted batch 0 is a new transaction, not a
-    silently-skipped replay — the collision maintenance.py fails loudly
-    on cannot corrupt a parts table because every insert lands in its own
-    part directory.
+    silently-skipped replay; the stream re-ingests, and because every
+    insert lands in its own part directory the two streams' batches can
+    never overwrite each other.
 
     ``dedup_content=True`` adds ClickHouse's OTHER insert dedup: the
     block CONTENT fingerprint (order-independent, :func:`content_
@@ -347,7 +346,7 @@ def insert_into_parts(
     byte-identical rows is a no-op even with no batch_id — the retry
     protection for producers that cannot carry a transaction id. Costs
     one extra aggregate job per insert, hence opt-in."""
-    io, base = _io_for(path)
+    io, base = io_for(path)
     meta = _load_meta(io, base)
     app = app_id or ""
 
@@ -374,7 +373,7 @@ def insert_into_parts(
         if fp in _committed_content(ver):
             return {"version": ver, "replayed": True, "part": None}
 
-    if ver == 0 and io.read_text(_join(io, base, SCHEMA_META)) is None:
+    if ver == 0 and io.read_text(join(io, base, SCHEMA_META)) is None:
         # record the row schema once, at first insert: a later OPTIMIZE or
         # mutation whose output vanishes (all rows TTL-expired / cancelled /
         # deleted) commits a version with ZERO parts, and read_parts needs
@@ -383,7 +382,7 @@ def insert_into_parts(
         io.write_swap(base, SCHEMA_META, df.schema.json())
 
     part_name = f"p-{uuid.uuid4().hex}"
-    part_path = _join(io, base, PARTS_DIR, part_name)
+    part_path = join(io, base, PARTS_DIR, part_name)
     writer_df = df
     pcol = meta["partition_col"]
     # ClickHouse's table key IS an ORDER BY prefix: a keyed engine with no
@@ -442,7 +441,7 @@ def insert_into_parts(
         if content:
             doc["content"] = sorted(content)
         if io.write_exclusive(
-            _join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(doc)
+            join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(doc)
         ):
             return {"version": ver + 1, "replayed": False, "part": part_name}
         # lost the race — re-read and retry the commit only
@@ -464,7 +463,7 @@ def _write_projections(io, spark: SparkSession, part_path: str, meta: dict) -> N
     written = spark.read.parquet(part_path)
     for pname, spec in meta["projections"].items():
         states = aggregate_states(written, spec["key_cols"], spec["agg_spec"])
-        states.write.mode("error").parquet(_join(io, part_path, f"_proj_{pname}"))
+        states.write.mode("error").parquet(join(io, part_path, f"_proj_{pname}"))
 
 
 # ---------------------------------------------------------------------------
@@ -483,7 +482,7 @@ def _unescape_partition(v: str) -> str:
 def _part_partitions(io, base: str, part_name: str, pcol: str) -> list[str]:
     """The partition values physically present in a part directory —
     one ``list_names`` metadata call, never a data scan."""
-    d = _join(io, base, PARTS_DIR, part_name)
+    d = join(io, base, PARTS_DIR, part_name)
     out = []
     for name in io.list_names(d):
         if name.startswith(f"{pcol}="):
@@ -498,9 +497,9 @@ def _live_partition_dirs(io, base: str, p: dict, pcol: str) -> list[str] | None:
     skip = set(p.get("skip", []))
     if not skip:
         return None
-    d = _join(io, base, PARTS_DIR, p["name"])
+    d = join(io, base, PARTS_DIR, p["name"])
     return [
-        _join(io, d, name)
+        join(io, d, name)
         for name in io.list_names(d)
         if name.startswith(f"{pcol}=")
         and _unescape_partition(name.split("=", 1)[1]) not in skip
@@ -513,7 +512,7 @@ def _read_part_df(spark: SparkSession, io, base: str, p: dict, pcol: str | None)
     ``basePath`` keeps the partition column; no filter, no scan of the
     skipped data). Returns None when every partition is skipped (such
     parts are normally dropped from the version doc at commit time)."""
-    d = _join(io, base, PARTS_DIR, p["name"])
+    d = join(io, base, PARTS_DIR, p["name"])
     if not p.get("skip") or not pcol:
         return spark.read.parquet(d)
     live = _live_partition_dirs(io, base, p, pcol)
@@ -555,7 +554,7 @@ def read_parts(
     no data moves until the collapse's one key shuffle. When the version
     is marked ``collapsed`` (a full OPTIMIZE), FINAL skips the window —
     the read is a straight scan."""
-    io, base = _io_for(path)
+    io, base = io_for(path)
     meta = _load_meta(io, base)
     ver = current_version(path) if version is None else version
     if ver == 0:
@@ -569,7 +568,7 @@ def read_parts(
         # schema recorded at first insert, like ClickHouse's empty result
         from pyspark.sql import types as T
 
-        schema_txt = io.read_text(_join(io, base, SCHEMA_META))
+        schema_txt = io.read_text(join(io, base, SCHEMA_META))
         if schema_txt is None:  # pre-schema-file table: can't conjure one
             raise FileNotFoundError(f"version {ver} of {path} is empty")
         return spark.createDataFrame([], T.StructType.fromJson(json.loads(schema_txt)))
@@ -731,7 +730,7 @@ def read_projection(
     re-aggregate associatively to coarser keys, so one projection serves
     every rollup of its key set — the routing rule :func:`route_projection`
     implements."""
-    io, base = _io_for(path)
+    io, base = io_for(path)
     meta = _load_meta(io, base)
     spec = (meta.get("projections") or {}).get(name)
     if spec is None:
@@ -749,7 +748,7 @@ def read_projection(
         raise FileNotFoundError(f"version {ver} of {path} is empty")
     legs = [
         spark.read.parquet(
-            _join(io, base, PARTS_DIR, p["name"], f"_proj_{name}")
+            join(io, base, PARTS_DIR, p["name"], f"_proj_{name}")
         )
         for p in sorted(doc["parts"], key=lambda q: q["seq"])
     ]
@@ -771,7 +770,7 @@ def route_projection(
     requested aggregate column; among qualifiers the fewest-keys one wins
     (fewest state rows to scan). Returns None when the base table must
     answer."""
-    io, base = _io_for(path)
+    io, base = io_for(path)
     meta = _load_meta(io, base)
     best: str | None = None
     best_width = None
@@ -831,7 +830,7 @@ def optimize_parts(
     ``as_of`` (epoch seconds) additionally drops rows expired under the
     table's TTL — the merge-time TTL application ClickHouse performs; it
     is caller-supplied so maintenance stays deterministic and testable."""
-    io, base = _io_for(path)
+    io, base = io_for(path)
     meta = _load_meta(io, base)
     ver = current_version(path)
     if ver == 0:
@@ -864,7 +863,7 @@ def optimize_parts(
         # result is NO part at all (ClickHouse drops fully-expired parts)
         part_name = None
     else:
-        part_path = _join(io, base, PARTS_DIR, part_name)
+        part_path = join(io, base, PARTS_DIR, part_name)
         pcol = meta["partition_col"]
         order_by = meta["order_by"]
         if pcol:
@@ -912,7 +911,7 @@ def optimize_parts(
         if cur.get("content"):
             new_doc["content"] = cur["content"]
         if io.write_exclusive(
-            _join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(new_doc)
+            join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(new_doc)
         ):
             return {"version": ver + 1, "merged": len(merge), "part": part_name}
 
@@ -957,7 +956,7 @@ def optimize_partitions(
     Tables with projections refuse: input parts keep their full-range
     projection states while losing base partitions, which would
     double-count through ``read_projection``."""
-    io, base = _io_for(path)
+    io, base = io_for(path)
     meta = _load_meta(io, base)
     pcol = meta.get("partition_col")
     if not pcol:
@@ -993,12 +992,12 @@ def optimize_partitions(
 
     legs = []
     for p in merge:
-        d = _join(io, base, PARTS_DIR, p["name"])
+        d = join(io, base, PARTS_DIR, p["name"])
         # resolve against the ACTUAL directory names (Hive-escaped by the
         # writer — e.g. ':' -> '%3A') rather than rebuilding them from the
         # unescaped values, mirroring _live_partition_dirs
         subs = [
-            _join(io, d, name)
+            join(io, d, name)
             for name in sorted(io.list_names(d))
             if name.startswith(f"{pcol}=")
             and _unescape_partition(name.split("=", 1)[1]) in holds[p["name"]]
@@ -1017,7 +1016,7 @@ def optimize_partitions(
     if df.isEmpty():
         part_name = None  # every row expired/cancelled: no output part
     else:
-        part_path = _join(io, base, PARTS_DIR, part_name)
+        part_path = join(io, base, PARTS_DIR, part_name)
         w = df.repartition(F.col(pcol))
         if meta["order_by"]:
             w = w.sortWithinPartitions(pcol, *meta["order_by"])
@@ -1060,7 +1059,7 @@ def optimize_partitions(
         if cur.get("content"):
             new_doc["content"] = cur["content"]
         if io.write_exclusive(
-            _join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(new_doc)
+            join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(new_doc)
         ):
             return {
                 "version": ver + 1,
@@ -1090,7 +1089,7 @@ def vacuum_parts(
     are deleted only when older than ``orphan_ttl_secs``: an in-flight
     insert's part is never swept. Time travel to a vacuumed version fails
     loudly with FileNotFoundError."""
-    io, base = _io_for(path)
+    io, base = io_for(path)
     ids = _version_ids(io, base)
     keep = set(ids[-keep_versions:]) if keep_versions > 0 else set()
     referenced: set[str] = set()  # parts retained versions still need
@@ -1106,15 +1105,15 @@ def vacuum_parts(
         if n not in keep:
             # deleting a version file is atomic at the namespace level on
             # both backends; readers of retained versions are unaffected
-            io.delete(_join(io, base, VERSIONS_DIR, f"v{n}.json"))
+            io.delete(join(io, base, VERSIONS_DIR, f"v{n}.json"))
             dropped_versions.append(n)
 
     dropped_parts = []
     now = time.time()
-    for name in io.list_names(_join(io, base, PARTS_DIR)):
+    for name in io.list_names(join(io, base, PARTS_DIR)):
         if name in referenced:
             continue
-        p = _join(io, base, PARTS_DIR, name)
+        p = join(io, base, PARTS_DIR, name)
         committed_once = name in ever_referenced
         if not committed_once:
             # possible in-flight insert: apply the TTL guard
@@ -1146,7 +1145,7 @@ def parts_table_diff(
     :func:`..operators.diff.table_diff`."""
     from ..operators.diff import table_diff
 
-    io, base = _io_for(path)
+    io, base = io_for(path)
     meta = _load_meta(io, base)
     keys = meta["key_cols"]
     if not keys:
@@ -1198,7 +1197,7 @@ def mutate_parts(
     GDPR-style 'delete these keys wherever they are' ask."""
     if (delete_ids is None) != (id_col is None):
         raise ValueError("delete_ids and id_col must be passed together")
-    io, base = _io_for(path)
+    io, base = io_for(path)
     meta = _load_meta(io, base)
     if set_exprs:
         protected = set(meta["key_cols"]) | {
@@ -1244,7 +1243,7 @@ def mutate_parts(
             dropped += 1
             continue
         part_name = f"p-{uuid.uuid4().hex}"
-        part_path = _join(io, base, PARTS_DIR, part_name)
+        part_path = join(io, base, PARTS_DIR, part_name)
         pcol = meta["partition_col"]
         order_by = meta["order_by"]
         if pcol:
@@ -1280,7 +1279,7 @@ def mutate_parts(
         if cur.get("content"):
             new_doc["content"] = cur["content"]
         if io.write_exclusive(
-            _join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(new_doc)
+            join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(new_doc)
         ):
             return {
                 "version": ver + 1,
@@ -1299,7 +1298,7 @@ def parts_stats(path: str, *, version: int | None = None) -> list[dict]:
     sequence, byte size and file count — the signals a merge policy
     reads. Pure metadata (local walk / one getContentSummary RPC per
     part); never a data scan."""
-    io, base = _io_for(path)
+    io, base = io_for(path)
     meta = _load_meta(io, base)  # fail loudly and clearly on a missing table
     ver = current_version(path) if version is None else version
     if ver == 0:
@@ -1315,7 +1314,7 @@ def parts_stats(path: str, *, version: int | None = None) -> list[dict]:
             sizes = [io.du(d) for d in live]
             nbytes, nfiles = sum(s[0] for s in sizes), sum(s[1] for s in sizes)
         else:
-            nbytes, nfiles = io.du(_join(io, base, PARTS_DIR, p["name"]))
+            nbytes, nfiles = io.du(join(io, base, PARTS_DIR, p["name"]))
         row = {"name": p["name"], "seq": p["seq"], "bytes": nbytes, "files": nfiles}
         if skip:
             row["skip"] = skip
@@ -1328,7 +1327,7 @@ def partition_stats(path: str, *, version: int | None = None) -> list[dict]:
     how many live parts hold it and their total bytes/files — the
     signals the per-partition merge policy reads. Pure metadata (one
     directory listing + one du per live (part, partition) pair)."""
-    io, base = _io_for(path)
+    io, base = io_for(path)
     meta = _load_meta(io, base)
     pcol = meta.get("partition_col")
     if not pcol:
@@ -1340,7 +1339,7 @@ def partition_stats(path: str, *, version: int | None = None) -> list[dict]:
     acc: dict[str, dict] = {}
     for p in doc["parts"]:
         skip = set(p.get("skip", []))
-        d = _join(io, base, PARTS_DIR, p["name"])
+        d = join(io, base, PARTS_DIR, p["name"])
         # du the ACTUAL directory names (Hive-escaped by the writer —
         # ':' -> '%3A' etc.); reconstructing f"{pcol}={v}" from the
         # unescaped value points at a directory that does not exist
@@ -1350,7 +1349,7 @@ def partition_stats(path: str, *, version: int | None = None) -> list[dict]:
             v = _unescape_partition(name.split("=", 1)[1])
             if v in skip:
                 continue
-            nbytes, nfiles = io.du(_join(io, d, name))
+            nbytes, nfiles = io.du(join(io, d, name))
             row = acc.setdefault(
                 v, {"partition": v, "n_parts": 0, "bytes": 0, "files": 0}
             )
@@ -1386,7 +1385,7 @@ def maintain_parts(
     ClickHouse's merge-time TTL (parts with no expired rows are left
     alone). Unpartitioned and projected tables keep the full prefix
     merge."""
-    io, base = _io_for(path)
+    io, base = io_for(path)
     meta = _load_meta(io, base)
     pcol = meta.get("partition_col")
     n_parts = len(parts_stats(path))

@@ -6,7 +6,7 @@ corpus.
 the accepted documents. This module wires that absorb step into
 ``foreachBatch`` so a document stream continuously lands ONLY novel
 content — the same one-transform-two-drivers discipline as
-``streaming/maintenance.py`` / ``scd2.py`` / ``semdedup_stream.py``.
+``streaming/scd2.py`` / ``semdedup_stream.py``.
 
 Retry posture is the operator's (document-level, no transaction log):
 replayed batches re-classify and reject as exact dups, so absorption

@@ -10,8 +10,7 @@ candidate-filtered verify scan.
 
 Unlike the HLL stream (register max — idempotent over values), count-min
 cells ADD, so a replayed micro-batch would double-count. Exactly-once
-comes from the foreachBatch batch id, the same discipline as
-``streaming/maintenance.py``:
+comes from the foreachBatch batch id:
 
 - the sketch lives in VERSIONED directories ``{path}/sketch_v<batch_id>``;
 - ``{path}/meta`` (one row: version, last_batch_id) is the commit marker,
@@ -20,7 +19,9 @@ comes from the foreachBatch batch id, the same discipline as
   between the version write and the meta write leaves an orphan version
   dir that the retry simply rewrites with identical content (same
   previous version + same batch = same cells) before committing meta;
-- superseded version dirs are removed best-effort AFTER the commit.
+- superseded version dirs are removed best-effort AFTER the commit,
+  through the scheme-aware :func:`..sources.storage.rmtree` (correctness
+  never depends on the cleanup: meta points at the live version).
 
 Scale posture: the per-batch sketch is depth x width cells at most
 (24k rows at defaults) regardless of batch size; the merge unions two
@@ -30,6 +31,7 @@ cell tables and re-aggregates — cost independent of history length.
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import suppress
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +45,7 @@ from ..operators.heavy import (
     cm_sketch,
     heavy_hitters,
 )
+from ..sources.storage import rmtree
 
 
 def _read_meta(spark: SparkSession, path: str):
@@ -50,23 +53,6 @@ def _read_meta(spark: SparkSession, path: str):
         return spark.read.parquet(f"{path}/meta").collect()[0]  # 1 row
     except AnalysisException:
         return None
-
-
-def _rm_version_dir(p: str) -> None:
-    """Best-effort removal of a superseded ``sketch_v<N>`` dir, routed
-    through the same scheme-aware FS backend the manifest machinery uses
-    (maintenance._io_for) — a plain shutil.rmtree silently no-ops on
-    HDFS/S3/viewfs lakes and superseded versions would accumulate forever
-    (advice r6). Best-effort stays best-effort: correctness never depends
-    on the cleanup (meta points at the live version), so failures are
-    swallowed."""
-    from .maintenance import _io_for
-
-    try:
-        io, norm = _io_for(p)
-        io.rmtree(norm)
-    except Exception:
-        pass
 
 
 def upsert_cm_sketch_batch(
@@ -114,7 +100,8 @@ def upsert_cm_sketch_batch(
         "key_cols array<string>",
     ).write.mode("overwrite").parquet(f"{path}/meta")
     if meta is not None:  # best-effort cleanup AFTER the commit
-        _rm_version_dir(f"{path}/sketch_v{int(meta['version'])}")
+        with suppress(Exception):
+            rmtree(f"{path}/sketch_v{int(meta['version'])}")
     return {
         "batch_id": batch_id, "applied": True,
         "n_batch_rows": int(n_rows), "version": version,

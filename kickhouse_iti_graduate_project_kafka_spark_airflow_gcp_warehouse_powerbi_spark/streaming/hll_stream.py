@@ -30,19 +30,20 @@ hazard without the previous driver-side collect of the whole sketch
 table (at lgk=14 over a decade of days that collect moved ~60 MB
 through the driver per batch; the executors now write the merge
 directly). Superseded versions are removed best-effort AFTER the flip,
-through the scheme-aware FS backend.
+through the scheme-aware :func:`..sources.storage.rmtree`.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import suppress
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
-from .heavy_stream import _rm_version_dir
+from ..sources.storage import rmtree
 
 
 def _read_meta(spark: SparkSession, path: str):
@@ -104,7 +105,8 @@ def upsert_hll_batch(
     ).write.mode("overwrite").parquet(f"{path}/meta")
     n_total = spark.read.parquet(f"{path}/sketch_v{version}").count()
     if meta is not None:  # best-effort cleanup AFTER the commit
-        _rm_version_dir(f"{path}/sketch_v{int(meta['version'])}")
+        with suppress(Exception):
+            rmtree(f"{path}/sketch_v{int(meta['version'])}")
     return {
         "n_batch_rows": int(n_batch),
         "n_days_touched": new.count(),

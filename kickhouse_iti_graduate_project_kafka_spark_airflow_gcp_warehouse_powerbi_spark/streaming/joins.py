@@ -1,8 +1,8 @@
 """Watermarked stream-stream joins — bounded-state event enrichment.
 
 The reference enriches events against lookup topics by *batch* joins after
-landing (ClickHouse MV joins; `eng/streaming/maintenance.py` mirrors that
-as foreachBatch). When BOTH sides are live streams, the Spark-native answer
+landing (ClickHouse MV joins; `streaming/parts_stream.py` lands them as
+foreachBatch parts). When BOTH sides are live streams, the Spark-native answer
 is a watermarked interval join: each side declares how late it can be, the
 join condition bounds how far apart matching rows' event times may sit, and
 the state store holds only rows inside watermark ± interval — bounded

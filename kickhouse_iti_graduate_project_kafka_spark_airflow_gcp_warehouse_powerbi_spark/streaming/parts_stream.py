@@ -14,9 +14,9 @@ becoming a MergeTree part, deduplicated by block hash on retry
   orphan part from a crash *before* the version commit is invisible and
   vacuumed later);
 - ``app_id`` defaults to the checkpoint's persisted streaming query id
-  (the same stream-identity rule maintenance.py enforces): a RESET
-  checkpoint restarts batch ids at 0 under a fresh query id, which is a
-  new transaction namespace — re-ingestion, never silent data loss.
+  (:func:`..sources.storage.checkpoint_query_id`): a RESET checkpoint
+  restarts batch ids at 0 under a fresh query id, which is a new
+  transaction namespace — re-ingestion, never silent data loss.
 
 With a ``replacing`` engine this is a streaming upsert pipeline: CDC
 events inserted as-they-arrive; readers call ``read_parts(final=True)``
@@ -24,6 +24,11 @@ for latest-state, and a periodic ``optimize_parts`` + ``vacuum_parts``
 maintenance pass (the background-merge analogue) keeps the part count
 and FINAL cost bounded. Scale: each micro-batch costs exactly its own
 write + one tiny version-file commit; nothing rewrites history.
+
+Joins keep the reference MVs' left-driven trigger semantics (J1-J3): a
+static parent joined into the stream before the sink is read per
+micro-batch, so inserts to the parent alone never retrigger child rows
+— exactly like ClickHouse MV joins (DDL 369-414).
 """
 
 from __future__ import annotations
@@ -34,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.parts import aggregate_states, insert_into_parts
-from .maintenance import _checkpoint_query_id
+from ..sources.storage import checkpoint_query_id
 
 
 def parts_sink(
@@ -50,7 +55,7 @@ def parts_sink(
     engine are table properties, not stream properties."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        app = app_id if app_id is not None else _checkpoint_query_id(checkpoint)
+        app = app_id if app_id is not None else checkpoint_query_id(checkpoint)
         insert_into_parts(batch_df, path, batch_id=int(batch_id), app_id=app or "")
 
     return (
@@ -86,7 +91,7 @@ def aggregating_parts_sink(
     projected to the state-column shape (e.g. ``n=1, total=v, hi=v``)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        app = app_id if app_id is not None else _checkpoint_query_id(checkpoint)
+        app = app_id if app_id is not None else checkpoint_query_id(checkpoint)
         states = aggregate_states(batch_df, key_cols, agg_spec)
         insert_into_parts(states, path, batch_id=int(batch_id), app_id=app or "")
 

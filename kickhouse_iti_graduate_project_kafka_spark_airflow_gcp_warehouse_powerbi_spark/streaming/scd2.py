@@ -1,10 +1,10 @@
 """Incremental SCD Type-2 maintenance — streaming dimension upserts.
 
 ``operators/scd.py`` builds an SCD2 dimension in one batch pass; this
-module keeps that dimension CURRENT as micro-batches arrive, the same
-one-transform-two-drivers discipline as ``streaming/maintenance.py``
-(ST8): ``upsert_scd2_batch`` is the whole algorithm, and
-``maintain_scd2_stream`` merely wires it into ``foreachBatch``.
+module keeps that dimension CURRENT as micro-batches arrive, the
+one-transform-two-drivers discipline (ST8): ``upsert_scd2_batch`` is
+the whole algorithm, and ``maintain_scd2_stream`` merely wires it into
+``foreachBatch``.
 
 Design for scale:
 
@@ -23,8 +23,8 @@ Design for scale:
   before the open run's ``last_ts`` are already applied and are dropped,
   so a failed-then-retried micro-batch (Spark's at-least-once contract)
   converges to byte-identical dimension state — the same effective
-  exactly-once the ``_batch_id`` silver sink provides, adapted to a
-  merge target.
+  exactly-once the parts sink's ``(app_id, batch_id)`` transactions
+  provide, adapted to a merge target.
 
 Assumes per-key event-time-ordered arrival across batches (the Kafka
 per-partition ordering guarantee the reference pipeline already relies

@@ -3,8 +3,8 @@ embedding stream.
 
 ``operators/semdedup.py`` classifies one batch against one corpus; this
 module keeps a SURVIVORS table current as micro-batches arrive, the same
-one-transform-two-drivers discipline as ``streaming/maintenance.py`` and
-``streaming/scd2.py``: ``upsert_semdedup_batch`` is the whole algorithm,
+one-transform-two-drivers discipline as ``streaming/scd2.py``:
+``upsert_semdedup_batch`` is the whole algorithm,
 ``maintain_semdedup_stream`` merely wires it into ``foreachBatch``.
 
 Design for scale:
@@ -54,6 +54,7 @@ from pyspark.sql.utils import AnalysisException
 
 from ..operators.ivf import cluster_for_cell_write
 from ..operators.semdedup import semdedup_incremental
+from ..sources.storage import HadoopIO
 
 
 def _read_survivors(spark: SparkSession, path: str) -> DataFrame | None:
@@ -227,14 +228,14 @@ def reconcile_semdedup_survivors(
     resume against the reconciled table.
 
     The swap reuses the restore-first two-rename protocol of
-    ``operators/dedup.compact_dedup_index`` (Hadoop ``FileSystem`` API,
-    scheme-agnostic; a crash between the renames is recovered by the
-    next run restoring from the staged copies before deleting anything).
+    ``operators/dedup.compact_dedup_index`` (the Hadoop ``FileSystem``
+    backend of ``sources/storage.py``, scheme-agnostic; a crash between
+    the renames is recovered by the next run restoring from the staged
+    copies before deleting anything).
 
     Returns {n_corpus, n_survivors, n_revoked, n_admitted} — revoked =
     ids the streamed table kept that the batch answer prunes, admitted =
     ids the batch answer keeps that the streamed table lacked."""
-    from ..operators.dedup import _IndexFs
     from ..operators.semdedup import semdedup
 
     marks = semdedup(
@@ -253,7 +254,7 @@ def reconcile_semdedup_survivors(
         .select(id_col, vec_col, "cell")
     )
 
-    fs = _IndexFs(spark)
+    fs = HadoopIO(spark)
     tmp_dir = f"{survivors_path}.reconcile-tmp"
     old_dir = f"{survivors_path}.reconcile-old"
     if not fs.exists(survivors_path):

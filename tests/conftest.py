@@ -64,13 +64,13 @@ _SLOW_TIER = {
 
 
 def _in_slow_tier(item) -> bool:
-    rel = item.nodeid.split("/")[-1]  # tests/foo.py::test -> foo.py::test
-    mod = rel.split("::", 1)[0]
+    # split on "::" first: a parameter id may itself contain "/"
+    path, _, name = item.nodeid.partition("::")
+    mod = os.path.basename(path)  # tests/foo.py -> foo.py
     if _SLOW_TIER.get(mod, True) is None:
         return True
     # strip parametrization for list matching
-    base = rel.split("[", 1)[0]
-    return base in _SLOW_TIER
+    return f"{mod}::{name.split('[', 1)[0]}" in _SLOW_TIER
 
 
 def pytest_configure(config):
@@ -129,7 +129,7 @@ def stream_tmpdir():
 def viewfs_root(spark, stream_tmpdir):
     """A viewfs:// mount over a tmpdir — genuine non-``file``-scheme Hadoop
     machinery (ViewFileSystem resolution) over local storage, shared by
-    the manifest and sketch-maintenance suites. Yields
+    the storage, parts-table and sketch-maintenance suites. Yields
     (viewfs_uri, backing_local_dir)."""
     import uuid
 
@@ -141,3 +141,13 @@ def viewfs_root(spark, stream_tmpdir):
     conf.set(f"fs.viewfs.mounttable.{name}.link./store", f"file://{stream_tmpdir}")
     yield f"viewfs://{name}/store", stream_tmpdir
     conf.unset(f"fs.viewfs.mounttable.{name}.link./store")
+
+
+@pytest.fixture(params=["", "file:", "viewfs"])
+def scheme_root(request, spark, tmp_path):
+    """(root path, backing local dir) per storage scheme: a bare path runs
+    the driver ``os`` backend; a ``file:`` URI and a viewfs:// mount run
+    the Hadoop FileSystem backend (LocalFileSystem / ViewFileSystem)."""
+    if request.param == "viewfs":
+        return request.getfixturevalue("viewfs_root")
+    return f"{request.param}{tmp_path}", str(tmp_path)

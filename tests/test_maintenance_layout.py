@@ -4,6 +4,8 @@ partition retention (TTL analogue)."""
 import glob
 import os
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources.gold_layout import (
@@ -73,15 +75,21 @@ def test_compaction_with_predicate_touches_only_matching(spark, sf_small, tmp_pa
     assert len(glob.glob(f"{path}/month={target}/*.parquet")) == 1
 
 
-def test_retention_sweep_drops_old_partitions(spark, sf_small, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file:"])
+def test_retention_sweep_drops_old_partitions(spark, sf_small, tmp_path, scheme):
+    """The bare path runs the driver ``os`` backend, the ``file:`` URI the
+    Hadoop FileSystem backend — the sweep must not assume a local path."""
     path = str(tmp_path / "gold_orders3")
     orders = _fragmented_table(spark, sf_small, path)
     months = sorted(
         d.split("=")[1] for d in os.listdir(path) if d.startswith("month=")
     )
     cutoff = months[len(months) // 2]
-    out = retention_sweep(spark, path, "month", cutoff)
+    out = retention_sweep(spark, f"{scheme}{path}", "month", cutoff)
     assert out["dropped_partitions"] == [m for m in months if m < cutoff]
+    assert sorted(
+        d.split("=")[1] for d in os.listdir(path) if d.startswith("month=")
+    ) == [m for m in months if m >= cutoff]
 
     back = spark.read.parquet(path)
     assert back.agg(F.min("month")).collect()[0][0] >= cutoff

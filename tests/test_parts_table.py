@@ -370,11 +370,18 @@ def test_commit_race_retries_to_next_version(spark, tbl):
     assert P.read_parts(spark, tbl).count() == 3
 
 
-def test_crash_between_part_write_and_commit_is_invisible(spark, tbl, monkeypatch):
+@pytest.fixture()
+def scheme_tbl(scheme_root):
+    root, local = scheme_root
+    return f"{root}/t", os.path.join(local, "t")
+
+
+def test_crash_between_part_write_and_commit_is_invisible(spark, scheme_tbl, monkeypatch):
+    tbl, local = scheme_tbl
     P.create_parts_table(tbl, engine="append")
     P.insert_into_parts(_orders(spark, [(1, 10, "O", 1.0)]), tbl, batch_id=0)
 
-    real_io_for = P._io_for
+    real_io_for = P.io_for
 
     class _Boom:
         def __init__(self, inner):
@@ -389,23 +396,46 @@ def test_crash_between_part_write_and_commit_is_invisible(spark, tbl, monkeypatc
         io, base = real_io_for(path)
         return _Boom(io), base
 
-    monkeypatch.setattr(P, "_io_for", _patched)
+    monkeypatch.setattr(P, "io_for", _patched)
     with pytest.raises(RuntimeError, match="injected crash"):
         P.insert_into_parts(_orders(spark, [(2, 11, "F", 2.0)]), tbl, batch_id=1)
-    monkeypatch.setattr(P, "_io_for", real_io_for)
+    monkeypatch.setattr(P, "io_for", real_io_for)
 
     # reader sees only the committed part; the orphan is invisible
     assert P.read_parts(spark, tbl).count() == 1
-    orphans = set(os.listdir(os.path.join(tbl, P.PARTS_DIR)))
+    assert P.table_history(tbl)[-1]["batch_ids"] == [0]
+    orphans = set(os.listdir(os.path.join(local, P.PARTS_DIR)))
     assert len(orphans) == 2  # one committed + one orphan on disk
     # retry completes the batch exactly once
     P.insert_into_parts(_orders(spark, [(2, 11, "F", 2.0)]), tbl, batch_id=1)
     assert P.read_parts(spark, tbl).count() == 2
+    assert P.table_history(tbl)[-1]["batch_ids"] == [0, 1]
     # vacuum with TTL=default keeps the fresh orphan; TTL=0 sweeps it
     assert P.vacuum_parts(tbl, keep_versions=10)["dropped_parts"] == []
     swept = P.vacuum_parts(tbl, keep_versions=10, orphan_ttl_secs=0)
     assert len(swept["dropped_parts"]) == 1
     assert P.read_parts(spark, tbl).count() == 2
+
+
+def test_retry_of_committed_batch_rewrites_nothing(spark, scheme_tbl):
+    """A batch retried after its version commit landed (the crash hit
+    before the streaming checkpoint advanced) writes no new part and
+    touches no committed part file — even when the retried frame carries
+    different rows, the committed part wins."""
+    tbl, local = scheme_tbl
+    P.create_parts_table(tbl, engine="append")
+    P.insert_into_parts(_orders(spark, [(1, 10, "O", 1.0), (2, 11, "O", 2.0)]), tbl, batch_id=0)
+    parts_dir = os.path.join(local, P.PARTS_DIR)
+    dirs_before = sorted(os.listdir(parts_dir))
+    files_before = _file_snapshot(parts_dir)
+    assert any(f[0].endswith(".parquet") for f in files_before)
+
+    r = P.insert_into_parts(_orders(spark, [(9, 99, "X", 9.0)]), tbl, batch_id=0)
+    assert r["replayed"]
+    assert sorted(os.listdir(parts_dir)) == dirs_before
+    assert _file_snapshot(parts_dir) == files_before
+    assert P.current_version(tbl) == 1
+    assert {x.o_orderkey for x in P.read_parts(spark, tbl).collect()} == {1, 2}
 
 
 def test_vacuum_drops_superseded_parts_after_optimize(spark, tbl):
@@ -616,11 +646,11 @@ def test_aggregating_parts_sink_is_a_streaming_mv(spark, tmpdir):
     assert P.current_version(tbl) == ver
 
     # a crash-retried batch (same app/batch id) is a no-op, never additive
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.maintenance import (
-        _checkpoint_query_id,
+    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources.storage import (
+        checkpoint_query_id,
     )
 
-    app = _checkpoint_query_id(f"{tmpdir}/chk")
+    app = checkpoint_query_id(f"{tmpdir}/chk")
     replay = spark.createDataFrame([(1, 1, 99.0, 99.0)], "k long, n long, total double, hi double")
     r = P.insert_into_parts(replay, tbl, batch_id=1, app_id=app or "")
     assert r["replayed"]

@@ -1,6 +1,5 @@
-"""Structured-Streaming tests: validator routing, watermark dedup,
-foreachBatch silver maintenance — file/memory sources so no broker is
-needed (SURVEY.md §5 item 3)."""
+"""Structured-Streaming tests: validator routing and watermark dedup —
+file/memory sources so no broker is needed (SURVEY.md §5 item 3)."""
 
 import json
 import os
@@ -10,20 +9,10 @@ import tempfile
 
 import pytest
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.fixtures import (
     entity_fixtures,
-)
-from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.operators.latest import (
-    latest_per_key,
-)
-from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.maintenance import (
-    backfill,
-    foreach_batch_transform,
-    read_silver,
-    write_batch_idempotent,
 )
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.monitor import (
     attach,
@@ -297,545 +286,3 @@ def test_payload_sha_ignores_ingested_at(spark):
     )
     shas = [r["payload_sha"] for r in routed.collect()]
     assert len(shas) == 2 and shas[0] == shas[1]
-
-
-def test_foreach_batch_maintenance_and_latest_view(spark, tmpdir):
-    """foreachBatch silver maintenance + latest-per-key gold view (ST8/A6)."""
-    import os
-
-    src_dir, silver = f"{tmpdir}/src", f"{tmpdir}/silver"
-    os.makedirs(src_dir)
-
-    versions = T.StructType(
-        [
-            T.StructField("idEvent", T.StringType()),
-            T.StructField("score", T.LongType()),
-            T.StructField("updated_at", T.LongType()),
-        ]
-    )
-    with open(f"{src_dir}/a.json", "w") as f:
-        for i, (e, s, v) in enumerate(
-            [("E1", 0, 1), ("E1", 2, 3), ("E1", 1, 2), ("E2", 7, 1)]
-        ):
-            f.write(json.dumps({"idEvent": e, "score": s, "updated_at": v}) + "\n")
-
-    def transform(df):
-        # W-layer transform shared by backfill and incremental maintenance
-        return df.withColumn("score2", F.col("score") * 2)
-
-    stream = spark.readStream.schema(versions).json(src_dir)
-    q = foreach_batch_transform(
-        stream, transform, silver, f"{tmpdir}/chk2", trigger="1 seconds"
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    silver_df = read_silver(spark, silver)
-    assert silver_df.count() == 4
-    assert "_batch_id" not in silver_df.columns
-    gold = latest_per_key(silver_df, ["idEvent"], ["updated_at"])
-    rows = {r["idEvent"]: (r["score"], r["score2"]) for r in gold.collect()}
-    assert rows == {"E1": (2, 4), "E2": (7, 14)}
-
-    # backfill path shares the same transform
-    backfill(spark.read.schema(versions).json(src_dir), transform, f"{tmpdir}/bf")
-    assert spark.read.parquet(f"{tmpdir}/bf").count() == 4
-
-
-def test_silver_sink_idempotent_on_batch_retry(spark, tmpdir):
-    """A failed-then-retried micro-batch must not double-append: re-running
-    the same batch id overwrites its own partition (dynamic partition
-    overwrite), leaving silver byte-identical — the effective idempotence
-    the reference gets from ClickPipes per-block inserts."""
-    silver = f"{tmpdir}/silver"
-    b0 = spark.createDataFrame([("E1", 1), ("E2", 2)], "id string, v int")
-    b1 = spark.createDataFrame([("E3", 3)], "id string, v int")
-
-    write_batch_idempotent(b0, 0, silver)
-    write_batch_idempotent(b0, 0, silver)  # simulated retry of batch 0
-    assert read_silver(spark, silver).count() == 2
-
-    write_batch_idempotent(b1, 1, silver)
-    rows = {(r["id"], r["v"]) for r in read_silver(spark, silver).collect()}
-    assert rows == {("E1", 1), ("E2", 2), ("E3", 3)}
-
-    # retry of batch 1 after batch 0 exists: still no duplicates anywhere
-    write_batch_idempotent(b1, 1, silver)
-    assert read_silver(spark, silver).count() == 3
-
-    # business partition columns nest under the batch partition
-    part = f"{tmpdir}/silver_p"
-    bp = spark.createDataFrame([("E1", "202601"), ("E2", "202602")], "id string, month string")
-    write_batch_idempotent(bp, 0, part, partition_cols=("month",))
-    write_batch_idempotent(bp, 0, part, partition_cols=("month",))
-    out = read_silver(spark, part)
-    assert out.count() == 2 and set(out.columns) == {"id", "month"}
-
-
-def test_silver_reader_sees_only_committed_batches(spark, tmpdir):
-    """Round-2 verdict #7: a reader concurrent with an in-flight batch
-    write must see only whole committed batches. An uncommitted
-    ``_batch_id`` partition (data on disk, no marker in ``_commits/``) is
-    invisible to read_silver; it appears atomically once the marker lands."""
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.maintenance import (
-        committed_batches,
-        record_commit,
-    )
-
-    silver = f"{tmpdir}/silver_atomic"
-    b0 = spark.createDataFrame([("E1", 1), ("E2", 2)], "id string, v int")
-    b1 = spark.createDataFrame([("E3", 3)], "id string, v int")
-    write_batch_idempotent(b0, 0, silver)
-    write_batch_idempotent(b1, 1, silver)
-    assert committed_batches(silver) == [0, 1]
-    assert read_silver(spark, silver).count() == 3
-
-    # simulate an in-flight writer: batch 2's data files exist but the
-    # commit marker does not (exactly the torn state a crash mid-write or
-    # a concurrent read during overwrite exposes)
-    import pyspark.sql.functions as SF
-
-    b2 = spark.createDataFrame([("E4", 4), ("E5", 5)], "id string, v int")
-    b2.withColumn("_batch_id", SF.lit(2)).write.mode("append").partitionBy(
-        "_batch_id"
-    ).parquet(silver)
-    assert committed_batches(silver) == [0, 1]
-    got = {(r["id"], r["v"]) for r in read_silver(spark, silver).collect()}
-    assert got == {("E1", 1), ("E2", 2), ("E3", 3)}, "uncommitted batch leaked"
-
-    # the marker makes the whole batch visible at once
-    record_commit(silver, 2)
-    got = {(r["id"], r["v"]) for r in read_silver(spark, silver).collect()}
-    assert got == {("E1", 1), ("E2", 2), ("E3", 3), ("E4", 4), ("E5", 5)}
-
-
-def test_backfill_clears_stale_manifest(spark, tmpdir):
-    """A full backfill overwrite reseeds the table without batch
-    bookkeeping; a stale manifest must not filter the new data away."""
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.maintenance import (
-        backfill,
-        committed_batches,
-    )
-
-    silver = f"{tmpdir}/silver_reseed"
-    b0 = spark.createDataFrame([("E1", 1)], "id string, v int")
-    write_batch_idempotent(b0, 0, silver)
-    assert committed_batches(silver) == [0]
-
-    src = spark.createDataFrame([("N1", 10), ("N2", 20)], "id string, v int")
-    backfill(src, lambda df: df, silver)
-    assert committed_batches(silver) is None
-    got = {(r["id"], r["v"]) for r in read_silver(spark, silver).collect()}
-    assert got == {("N1", 10), ("N2", 20)}
-
-
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize("scheme", ["", "file:"])
-def test_crash_between_data_write_and_manifest(spark, tmpdir, scheme):
-    """Crash injection leg 1: the process dies AFTER the batch's data files
-    land but BEFORE the manifest records it. The batch must stay invisible,
-    and the retry must complete it exactly once.
-
-    Parametrized over the path scheme: the bare path runs the driver-local
-    ``os`` backend, the ``file:`` URI runs the same protocol through the
-    Hadoop FileSystem backend (LocalFileSystem via spark._jvm)."""
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming import (
-        maintenance,
-    )
-
-    silver = f"{scheme}{tmpdir}/silver_crash1"
-    b0 = spark.createDataFrame([("E1", 1)], "id string, v int")
-    maintenance.write_batch_idempotent(b0, 0, silver)
-
-    # batch 1: kill between the parquet write and record_commit
-    b1 = spark.createDataFrame([("E2", 2), ("E3", 3)], "id string, v int")
-    orig = maintenance.record_commit
-
-    def _boom(*a, **k):
-        raise RuntimeError("injected crash before manifest update")
-
-    maintenance.record_commit = _boom
-    try:
-        import pytest
-
-        with pytest.raises(RuntimeError, match="injected crash"):
-            maintenance.write_batch_idempotent(b1, 1, silver)
-    finally:
-        maintenance.record_commit = orig
-
-    # data is on disk, but the batch is NOT committed and NOT visible
-    assert maintenance.committed_batches(silver) == [0]
-    got = {(r["id"], r["v"]) for r in maintenance.read_silver(spark, silver).collect()}
-    assert got == {("E1", 1)}, "half-committed batch leaked to readers"
-
-    # retry (Spark re-runs the batch from the checkpoint WAL): completes it
-    maintenance.write_batch_idempotent(b1, 1, silver)
-    assert maintenance.committed_batches(silver) == [0, 1]
-    got = {(r["id"], r["v"]) for r in maintenance.read_silver(spark, silver).collect()}
-    assert got == {("E1", 1), ("E2", 2), ("E3", 3)}
-
-
-@_pytest.mark.parametrize("scheme", ["", "file:"])
-def test_crash_between_manifest_and_checkpoint_skips_rewrite(spark, tmpdir, scheme):
-    """Crash injection leg 2 (the historical retry window): data AND
-    manifest landed, the crash hit before the streaming checkpoint
-    advanced, so Spark retries the batch. The retry must NOT rewrite the
-    already-visible partition — the data files must be untouched even if
-    the retried transform would produce different bytes.
-
-    ``file:`` variant exercises the Hadoop FileSystem manifest backend."""
-    import os
-
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming import (
-        maintenance,
-    )
-
-    silver = f"{scheme}{tmpdir}/silver_crash2"
-    b0 = spark.createDataFrame([("E1", 1), ("E2", 2)], "id string, v int")
-    maintenance.write_batch_idempotent(b0, 0, silver)
-    part_dir = os.path.join(str(tmpdir), "silver_crash2", "_batch_id=0")
-    before = {
-        f: os.path.getmtime(os.path.join(part_dir, f))
-        for f in os.listdir(part_dir)
-        if f.endswith(".parquet")
-    }
-    assert before, "expected parquet files in the batch partition"
-
-    # the retry delivers a DIFFERENT frame for the same batch id (e.g. a
-    # nondeterministic transform); the committed partition must win
-    b0_retry = spark.createDataFrame([("X9", 99)], "id string, v int")
-    maintenance.write_batch_idempotent(b0_retry, 0, silver)
-
-    after = {
-        f: os.path.getmtime(os.path.join(part_dir, f))
-        for f in os.listdir(part_dir)
-        if f.endswith(".parquet")
-    }
-    assert after == before, "retry rewrote an already-committed partition"
-    got = {(r["id"], r["v"]) for r in maintenance.read_silver(spark, silver).collect()}
-    assert got == {("E1", 1), ("E2", 2)}
-
-
-def test_manifest_is_single_swap_atomic_file(spark, tmpdir):
-    """The committed set lives in one manifest.json (no per-batch marker
-    litter, no temp leftovers), and legacy per-batch markers from a
-    pre-manifest table merge into it on the next commit."""
-    import json
-    import os
-
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming import (
-        maintenance,
-    )
-
-    silver = f"{tmpdir}/silver_manifest"
-    b = spark.createDataFrame([("E1", 1)], "id string, v int")
-    maintenance.write_batch_idempotent(b, 0, silver)
-    maintenance.write_batch_idempotent(
-        spark.createDataFrame([("E2", 2)], "id string, v int"), 1, silver
-    )
-    d = os.path.join(silver, "_commits")
-    names = sorted(os.listdir(d))
-    assert names == ["manifest.json"], f"unexpected commit files: {names}"
-    with open(os.path.join(d, "manifest.json")) as f:
-        doc = json.load(f)
-    assert doc["batch_ids"] == [0, 1]
-
-    # legacy migration: a pre-manifest marker merges on the next commit
-    with open(os.path.join(d, "7.json"), "w") as f:
-        json.dump({"batch_id": 7}, f)
-    assert maintenance.committed_batches(silver) == [0, 1, 7]
-    maintenance.record_commit(silver, 2)
-    assert maintenance.committed_batches(silver) == [0, 1, 2, 7]
-
-
-def test_manifest_remote_scheme_routing(spark, tmpdir, monkeypatch):
-    """Non-local schemes route through the Hadoop FileSystem backend, not
-    driver-local os I/O. Mocked: the backend factory is swapped for a fake
-    that records the paths it is handed and serves them from a local dir
-    (no object store in this container); the full commit protocol must
-    work through the backend interface alone."""
-    import os
-
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming import (
-        maintenance,
-    )
-
-    base = os.path.join(str(tmpdir), "mockstore")
-    os.makedirs(base, exist_ok=True)
-    seen: list[str] = []
-
-    class _FakeRemoteIO(maintenance._LocalManifestIO):
-        def _map(self, p: str) -> str:
-            assert p.startswith("mock://bucket/"), p
-            seen.append(p)
-            return os.path.join(base, p[len("mock://bucket/"):])
-
-        def isdir(self, p):
-            return super().isdir(self._map(p))
-
-        def mkdirs(self, p):
-            super().mkdirs(self._map(p))
-
-        def read_text(self, p):
-            return super().read_text(self._map(p))
-
-        def list_names(self, d):
-            return super().list_names(self._map(d))
-
-        def write_swap(self, d, name, text):
-            super().write_swap(self._map(d), name, text)
-
-        def rmtree(self, p):
-            super().rmtree(self._map(p))
-
-    monkeypatch.setattr(maintenance, "_hadoop_io", lambda _spark: _FakeRemoteIO())
-    maintenance.record_commit("mock://bucket/table", 0, run_id="r1")
-    maintenance.record_commit("mock://bucket/table", 3, run_id="r1")
-    assert maintenance.committed_batches("mock://bucket/table") == [0, 3]
-    assert maintenance.manifest_run_id("mock://bucket/table") == "r1"
-    assert seen and all(p.startswith("mock://bucket/") for p in seen)
-
-    # with NO active SparkSession a remote URI must fail closed (no JVM →
-    # no Hadoop FileSystem → refusing beats silently skipping visibility)
-    import pytest
-
-    from pyspark.sql import SparkSession
-
-    monkeypatch.setattr(SparkSession, "getActiveSession", classmethod(lambda cls: None))
-    with pytest.raises(RuntimeError, match="active SparkSession"):
-        maintenance.committed_batches("s3a://bucket/table")
-    # file: URIs fall back to the identical local backend without a JVM
-    assert maintenance.committed_batches("file:/nonexistent/table") is None
-
-
-def test_manifest_hadoop_backend_file_uri(spark, tmpdir):
-    """The real Hadoop FileSystem backend (via spark._jvm, LocalFileSystem)
-    round-trips the swap protocol on a file: URI: mkdirs, temp write,
-    hsync, FileContext rename-OVERWRITE swap, list, read, rmtree."""
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming import (
-        maintenance,
-    )
-
-    uri = f"file:{tmpdir}/hadoop_backend"
-    io, path = maintenance._io_for(uri)
-    assert isinstance(io, maintenance._HadoopManifestIO)
-    assert path == uri
-
-    maintenance.record_commit(uri, 0, run_id="q1")
-    maintenance.record_commit(uri, 1, run_id="q1")  # swap over existing manifest
-    assert maintenance.committed_batches(uri) == [0, 1]
-    assert maintenance.manifest_run_id(uri) == "q1"
-    # no temp-file litter after the atomic swaps
-    names = io.list_names(f"{uri}/_commits")
-    assert [n for n in names if n.endswith(".tmp")] == []
-
-
-def test_txn_app_id_guards_checkpoint_reset(spark, tmpdir):
-    """ADVICE r4 (medium): a committed batch id is only skipped for the
-    SAME stream identity. A reset checkpoint (new query id, batch ids
-    restart at 0) against an existing table fails loudly instead of
-    silently dropping every early batch; legacy manifests (no run_id) and
-    id-less writers keep the historical skip semantics."""
-    import pytest
-
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming import (
-        maintenance,
-    )
-
-    silver = f"{tmpdir}/silver_txn"
-    b0 = spark.createDataFrame([("E1", 1)], "id string, v int")
-    maintenance.write_batch_idempotent(b0, 0, silver, txn_app_id="streamA")
-    assert maintenance.manifest_run_id(silver) == "streamA"
-
-    # same-stream retry: skipped, no rewrite
-    maintenance.write_batch_idempotent(b0, 0, silver, txn_app_id="streamA")
-    assert maintenance.committed_batches(silver) == [0]
-
-    # different stream, colliding batch id → loud failure, data intact
-    b0_new = spark.createDataFrame([("X9", 99)], "id string, v int")
-    with pytest.raises(RuntimeError, match="checkpoint was reset"):
-        maintenance.write_batch_idempotent(b0_new, 0, silver, txn_app_id="streamB")
-    got = {(r["id"], r["v"]) for r in maintenance.read_silver(spark, silver).collect()}
-    assert got == {("E1", 1)}
-
-    # record_commit itself refuses cross-stream commits
-    with pytest.raises(RuntimeError, match="owned by stream run"):
-        maintenance.record_commit(silver, 5, run_id="streamB")
-
-    # id-less writer against a stamped manifest: legacy skip semantics
-    maintenance.write_batch_idempotent(b0_new, 0, silver)
-    assert got == {(r["id"], r["v"]) for r in maintenance.read_silver(spark, silver).collect()}
-
-    # backfill drops the manifest: the new stream then owns the table
-    maintenance.backfill(b0_new, lambda df: df, silver)
-    maintenance.write_batch_idempotent(b0_new, 0, silver, txn_app_id="streamB")
-    assert maintenance.manifest_run_id(silver) == "streamB"
-
-
-def test_checkpoint_query_id_derivation(tmpdir):
-    """foreach_batch_transform's default txn_app_id is the streaming query
-    id Spark persists at <checkpoint>/metadata — stable across restarts,
-    regenerated exactly when the checkpoint is reset."""
-    import json
-    import os
-
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming import (
-        maintenance,
-    )
-
-    ckpt = os.path.join(str(tmpdir), "ckpt_meta")
-    os.makedirs(ckpt, exist_ok=True)
-    assert maintenance._checkpoint_query_id(ckpt) is None  # not started yet
-    with open(os.path.join(ckpt, "metadata"), "w") as f:
-        json.dump({"id": "3f1d9c2a-query-id"}, f)
-    assert maintenance._checkpoint_query_id(ckpt) == "3f1d9c2a-query-id"
-    assert maintenance._checkpoint_query_id(f"{tmpdir}/never_existed") is None
-
-
-def test_foreach_batch_stamps_stream_identity(spark, tmpdir):
-    """End-to-end over the Hadoop (file:) manifest backend: a real
-    foreachBatch stream derives its txn app id from the checkpoint's
-    persisted query id and stamps it into the manifest; a SECOND stream
-    with a fresh checkpoint (new query id, batch ids restart at 0)
-    against the same table fails loudly instead of silently dropping
-    its first batch."""
-    import os
-
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming import (
-        maintenance,
-    )
-
-    src_dir = f"{tmpdir}/src_ident"
-    silver = f"file:{tmpdir}/silver_ident"
-    os.makedirs(src_dir)
-    schema = T.StructType(
-        [T.StructField("id", T.StringType()), T.StructField("v", T.LongType())]
-    )
-    with open(f"{src_dir}/a.json", "w") as f:
-        f.write(json.dumps({"id": "E1", "v": 1}) + "\n")
-
-    stream = spark.readStream.schema(schema).json(src_dir)
-    q = maintenance.foreach_batch_transform(
-        stream, lambda df: df, silver, f"{tmpdir}/chk_ident", trigger="1 seconds"
-    )
-    try:
-        q.processAllAvailable()
-        expected_id = str(q.id)
-    finally:
-        q.stop()
-    assert maintenance.manifest_run_id(silver) == expected_id
-    assert maintenance.read_silver(spark, silver).count() == 1
-
-    # new stream, RESET checkpoint, same table: its batch 0 collides with
-    # the committed batch 0 of the first stream -> loud failure via the
-    # foreachBatch error path (query terminates with our RuntimeError)
-    import pytest
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    stream2 = spark.readStream.schema(schema).json(src_dir)
-    q2 = maintenance.foreach_batch_transform(
-        stream2, lambda df: df, silver, f"{tmpdir}/chk_ident_RESET", trigger="1 seconds"
-    )
-    try:
-        with pytest.raises(StreamingQueryException, match="checkpoint was reset"):
-            q2.processAllAvailable()
-            q2.awaitTermination(30)
-    finally:
-        q2.stop()
-    # the table still holds exactly the first stream's data
-    assert maintenance.read_silver(spark, silver).count() == 1
-    assert maintenance.manifest_run_id(silver) == expected_id
-
-
-@_pytest.fixture()
-def viewfs_root(spark, tmpdir):
-    """Register a viewfs:// mount over tmpdir so the REAL Hadoop code
-    path — ViewFileSystem resolution, stream create + hsync/hflush,
-    FileContext.rename(OVERWRITE) — runs under a non-``file`` scheme
-    (VERDICT r5 item 6). No object store exists in this container; viewfs
-    is genuine non-local-scheme Hadoop machinery over local storage."""
-    import uuid
-
-    # unique mount-table name per test: Hadoop caches FileSystem
-    # instances by (scheme, authority), so reusing one authority would
-    # serve a stale mount table pointing at the previous test's tmpdir
-    name = f"mfstest{uuid.uuid4().hex[:8]}"
-    conf = spark._jsc.hadoopConfiguration()
-    conf.set(f"fs.viewfs.mounttable.{name}.link./store", f"file://{tmpdir}")
-    yield f"viewfs://{name}/store"
-    conf.unset(f"fs.viewfs.mounttable.{name}.link./store")
-
-
-def test_crash_injection_on_viewfs_scheme(spark, tmpdir, viewfs_root):
-    """Both crash-injection legs through the real Hadoop backend on a
-    registered non-``file`` scheme: (1) crash after data, before
-    manifest → batch invisible, retry completes it once; (2) retry of an
-    already-committed batch must not rewrite the partition."""
-    import os
-
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming import (
-        maintenance,
-    )
-
-    silver = f"{viewfs_root}/silver_crash_vfs"
-    b0 = spark.createDataFrame([("E1", 1)], "id string, v int")
-    maintenance.write_batch_idempotent(b0, 0, silver)
-    assert maintenance.committed_batches(silver) == [0]
-
-    # leg 1: die between the parquet write and record_commit
-    b1 = spark.createDataFrame([("E2", 2)], "id string, v int")
-    orig = maintenance.record_commit
-
-    def _boom(*a, **k):
-        raise RuntimeError("injected crash before manifest update")
-
-    maintenance.record_commit = _boom
-    try:
-        with _pytest.raises(RuntimeError, match="injected crash"):
-            maintenance.write_batch_idempotent(b1, 1, silver)
-    finally:
-        maintenance.record_commit = orig
-    assert maintenance.committed_batches(silver) == [0]
-    got = {(r["id"], r["v"]) for r in maintenance.read_silver(spark, silver).collect()}
-    assert got == {("E1", 1)}, "half-committed batch leaked through viewfs"
-    maintenance.write_batch_idempotent(b1, 1, silver)
-    assert maintenance.committed_batches(silver) == [0, 1]
-
-    # leg 2: a replay of committed batch 1 with different data is a no-op
-    part_dir = os.path.join(str(tmpdir), "silver_crash_vfs", "_batch_id=1")
-    before = {
-        f: os.path.getmtime(os.path.join(part_dir, f))
-        for f in os.listdir(part_dir)
-        if f.endswith(".parquet")
-    }
-    assert before
-    maintenance.write_batch_idempotent(
-        spark.createDataFrame([("X9", 99)], "id string, v int"), 1, silver
-    )
-    after = {
-        f: os.path.getmtime(os.path.join(part_dir, f))
-        for f in os.listdir(part_dir)
-        if f.endswith(".parquet")
-    }
-    assert after == before, "retry rewrote a committed partition via viewfs"
-    got = {(r["id"], r["v"]) for r in maintenance.read_silver(spark, silver).collect()}
-    assert got == {("E1", 1), ("E2", 2)}
-
-
-def test_manifest_swap_and_run_id_on_viewfs(spark, viewfs_root):
-    """The single-file manifest swap protocol (temp write + hsync +
-    FileContext rename-OVERWRITE) and the run_id stream identity both
-    round-trip on the non-local scheme."""
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming import (
-        maintenance,
-    )
-
-    silver = f"{viewfs_root}/silver_manifest_vfs"
-    maintenance.record_commit(silver, 0, run_id="r-vfs")
-    maintenance.record_commit(silver, 3, run_id="r-vfs")
-    assert maintenance.committed_batches(silver) == [0, 3]
-    assert maintenance.manifest_run_id(silver) == "r-vfs"

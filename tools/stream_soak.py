@@ -1,16 +1,21 @@
 #!/usr/bin/env python
-"""Streaming-maintenance soak with kill-injection at fixture scale
+"""Streaming parts-table soak with kill-injection at fixture scale
 (r10 verdict #7).
 
-The foreachBatch bronze→silver path (streaming/maintenance.py) and the
-parts streaming sink (streaming/parts_stream.py) are crash-drilled at
-unit scale in tests/; this tool replays a full events fixture through
-BOTH as a file-source micro-batch stream (maxFilesPerTrigger=1 — one
-batch per fixture file) while a parent process SIGKILLs the worker JVM
-mid-stream and restarts it from the same checkpoints, repeatedly. That
-is the real crash: no finally blocks, no graceful stop — torn staging
-files, manifest/checkpoint windows, parts version-file commits all land
-wherever the kill caught them.
+The parts streaming sinks (streaming/parts_stream.py) are crash-drilled
+at unit scale in tests/; this tool replays a full events fixture through
+two of them as file-source micro-batch streams (maxFilesPerTrigger=1 —
+one batch per fixture file) while a parent process SIGKILLs the worker
+JVM mid-stream and restarts it from the same checkpoints, repeatedly:
+
+- the append leg: ``parts_sink`` of the row-level bronze→silver
+  enrichment into an ``append`` parts table partitioned by ``day``;
+- the aggregating leg: ``aggregating_parts_sink`` into an
+  ``aggregating`` parts table.
+
+That is the real crash: no finally blocks, no graceful stop — torn part
+directories, part-write/checkpoint windows, version-file commits all
+land wherever the kill caught them.
 
 Final-state equality is the oracle: after the worker finally reports a
 clean drain, the parent recomputes both sinks' expected state through
@@ -21,8 +26,8 @@ order-insensitive xxhash64 XOR over every output column.
         --kills 15,35
 
 Writes sweeps/stream_soak_<tag>.json:
-    {"input_rows": N, "batches": B, "kills": K, "restarts": K+1,
-     "silver_equal": true, "parts_equal": true, ...}
+    {"input_rows": N, "batches_committed": B, "kills": K, "restarts": K+1,
+     "append_equal": true, "parts_equal": true, ...}
 """
 
 from __future__ import annotations
@@ -96,11 +101,9 @@ def worker(args) -> int:
     """One worker life: resume both streams from their checkpoints, drain
     the file source, stop cleanly. The parent may SIGKILL us at any
     point — that is the test."""
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.maintenance import (
-        foreach_batch_transform,
-    )
     from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.parts_stream import (
         aggregating_parts_sink,
+        parts_sink,
     )
 
     spark = _session("kickhouse-soak-worker")
@@ -113,12 +116,10 @@ def worker(args) -> int:
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q1 = foreach_batch_transform(
-        stream1,
-        _silver_transform,
-        f"{root}/silver",
-        f"{root}/ckpt_silver",
-        partition_cols=("day",),
+    q1 = parts_sink(
+        _silver_transform(stream1),
+        f"{root}/append",
+        f"{root}/ckpt_append",
         trigger="0 seconds",
     )
     stream2 = (
@@ -192,11 +193,12 @@ def main() -> int:
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work, exist_ok=True)
 
-    # the parts table must exist before the first insert
+    # the parts tables must exist before the first insert
     from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources.parts import (
         create_parts_table,
     )
 
+    create_parts_table(f"{work}/append", engine="append", partition_col="day")
     create_parts_table(
         f"{work}/parts", engine="aggregating", key_cols=AGG_KEY, agg_spec=AGG_SPEC
     )
@@ -248,24 +250,20 @@ def main() -> int:
 
     # equality oracle: one batch pass through the SAME transforms
     from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources.parts import (
-        read_parts,
-    )
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.maintenance import (
-        committed_batches,
-        read_silver,
-    )
-    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources.parts import (
         aggregate_states,
+        read_parts,
+        table_history,
     )
 
     spark = _session("kickhouse-soak-check")
     bronze = spark.read.parquet(src)
     input_rows = bronze.count()
 
-    got_silver = read_silver(spark, f"{work}/silver").select(*SILVER_COLS)
-    want_silver = _silver_transform(bronze).select(*SILVER_COLS)
-    n_got_s, h_got_s = _xor_hash(got_silver)
-    n_want_s, h_want_s = _xor_hash(want_silver)
+    got_append = read_parts(spark, f"{work}/append").select(*SILVER_COLS)
+    want_append = _silver_transform(bronze).select(*SILVER_COLS)
+    n_got_a, h_got_a = _xor_hash(got_append)
+    n_want_a, h_want_a = _xor_hash(want_append)
+    hist = table_history(f"{work}/append")
 
     got_parts = read_parts(spark, f"{work}/parts", final=True).select(
         "user_id", "n", "total"
@@ -279,11 +277,11 @@ def main() -> int:
     out = {
         "sf_dir": args.sf_dir,
         "input_rows": input_rows,
-        "batches_committed": len(committed_batches(f"{work}/silver") or []),
+        "batches_committed": len(hist[-1]["batch_ids"]) if hist else 0,
         "kills": killed,
         "restarts": restarts,
-        "silver_rows": [n_got_s, n_want_s],
-        "silver_equal": (n_got_s, h_got_s) == (n_want_s, h_want_s),
+        "append_rows": [n_got_a, n_want_a],
+        "append_equal": (n_got_a, h_got_a) == (n_want_a, h_want_a),
         "parts_rows": [n_got_p, n_want_p],
         "parts_equal": (n_got_p, h_got_p) == (n_want_p, h_want_p),
         "suite_secs": round(time.perf_counter() - t_suite, 1),
@@ -293,7 +291,7 @@ def main() -> int:
         json.dump(out, f, indent=1, sort_keys=True)
     print(json.dumps(out))
     shutil.rmtree(work, ignore_errors=True)
-    return 0 if out["silver_equal"] and out["parts_equal"] else 1
+    return 0 if out["append_equal"] and out["parts_equal"] else 1
 
 
 if __name__ == "__main__":
