@@ -4,8 +4,6 @@ partition retention (TTL analogue)."""
 import glob
 import os
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources.gold_layout import (
@@ -75,10 +73,7 @@ def test_compaction_with_predicate_touches_only_matching(spark, sf_small, tmp_pa
     assert len(glob.glob(f"{path}/month={target}/*.parquet")) == 1
 
 
-@pytest.mark.parametrize("scheme", ["", "file:"])
-def test_retention_sweep_drops_old_partitions(spark, sf_small, tmp_path, scheme):
-    """The bare path runs the driver ``os`` backend, the ``file:`` URI the
-    Hadoop FileSystem backend — the sweep must not assume a local path."""
+def _sweep_drops_old_partitions(spark, sf_small, tmp_path, scheme):
     path = str(tmp_path / "gold_orders3")
     orders = _fragmented_table(spark, sf_small, path)
     months = sorted(
@@ -95,6 +90,16 @@ def test_retention_sweep_drops_old_partitions(spark, sf_small, tmp_path, scheme)
     assert back.agg(F.min("month")).collect()[0][0] >= cutoff
     expected_kept = orders.filter(F.col("month") >= cutoff).count()
     assert back.count() == expected_kept
+
+
+def test_retention_sweep_drops_old_partitions(spark, sf_small, tmp_path):
+    _sweep_drops_old_partitions(spark, sf_small, tmp_path, "")
+
+
+def test_retention_sweep_drops_old_partitions_on_file_uri(spark, sf_small, tmp_path):
+    """The ``file:`` URI runs the Hadoop FileSystem backend — the sweep
+    must not assume a local path."""
+    _sweep_drops_old_partitions(spark, sf_small, tmp_path, "file:")
 
 
 def test_compaction_splits_oversized_partition(spark, sf_small, tmp_path):

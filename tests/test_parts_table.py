@@ -376,8 +376,7 @@ def scheme_tbl(scheme_root):
     return f"{root}/t", os.path.join(local, "t")
 
 
-def test_crash_between_part_write_and_commit_is_invisible(spark, scheme_tbl, monkeypatch):
-    tbl, local = scheme_tbl
+def _crash_between_part_write_and_commit(spark, tbl, local, monkeypatch):
     P.create_parts_table(tbl, engine="append")
     P.insert_into_parts(_orders(spark, [(1, 10, "O", 1.0)]), tbl, batch_id=0)
 
@@ -415,6 +414,20 @@ def test_crash_between_part_write_and_commit_is_invisible(spark, scheme_tbl, mon
     swept = P.vacuum_parts(tbl, keep_versions=10, orphan_ttl_secs=0)
     assert len(swept["dropped_parts"]) == 1
     assert P.read_parts(spark, tbl).count() == 2
+
+
+def test_crash_between_part_write_and_commit_is_invisible(spark, tbl, monkeypatch):
+    _crash_between_part_write_and_commit(spark, tbl, tbl, monkeypatch)
+
+
+@pytest.mark.parametrize("scheme_root", ["file:", "viewfs"], indirect=True)
+def test_crash_between_part_write_and_commit_is_invisible_on_hadoop_fs(
+    spark, scheme_tbl, monkeypatch
+):
+    """The same crash leg through the Hadoop FileSystem backend
+    (LocalFileSystem for ``file:``, ViewFileSystem for viewfs://)."""
+    tbl, local = scheme_tbl
+    _crash_between_part_write_and_commit(spark, tbl, local, monkeypatch)
 
 
 def test_retry_of_committed_batch_rewrites_nothing(spark, scheme_tbl):

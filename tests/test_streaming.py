@@ -1,5 +1,7 @@
-"""Structured-Streaming tests: validator routing and watermark dedup —
-file/memory sources so no broker is needed (SURVEY.md §5 item 3)."""
+"""Structured-Streaming tests: validator routing, watermark dedup and the
+foreachBatch silver sink (``parts_sink`` into a parts table) under batch
+retries and injected crashes — file/memory sources so no broker is
+needed (SURVEY.md §5 item 3)."""
 
 import json
 import os
@@ -9,10 +11,24 @@ import tempfile
 
 import pytest
 
+from pyspark.errors.exceptions.captured import StreamingQueryException
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.fixtures import (
     entity_fixtures,
+)
+from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.operators.latest import (
+    latest_per_key,
+)
+from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources import (
+    parts as P,
+)
+from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources.storage import (
+    checkpoint_query_id,
+)
+from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming import (
+    parts_stream,
 )
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.monitor import (
     attach,
@@ -286,3 +302,293 @@ def test_payload_sha_ignores_ingested_at(spark):
     )
     shas = [r["payload_sha"] for r in routed.collect()]
     assert len(shas) == 2 and shas[0] == shas[1]
+
+
+# ---------------------------------------------------------------------------
+# silver sink: foreachBatch into a parts table (streaming/parts_stream.py)
+# ---------------------------------------------------------------------------
+
+ROWS = T.StructType(
+    [T.StructField("id", T.StringType()), T.StructField("v", T.LongType())]
+)
+
+
+def _land(src: str, name: str, rows: list[dict]) -> None:
+    os.makedirs(src, exist_ok=True)
+    with open(os.path.join(src, name), "w") as f:
+        f.write("\n".join(json.dumps(r) for r in rows) + "\n")
+
+
+def _drain(spark, src: str, tbl: str, chk: str, schema=ROWS, transform=None) -> str:
+    """Run the silver sink over every file in ``src`` and stop; returns the
+    query id (the stream identity the sink derives its txn app id from)."""
+    stream = spark.readStream.schema(schema).json(src)
+    if transform is not None:
+        stream = transform(stream)
+    q = parts_stream.parts_sink(stream, tbl, chk, trigger="100 milliseconds")
+    try:
+        q.processAllAvailable()
+        return str(q.id)
+    finally:
+        q.stop()
+
+
+def _rows(spark, tbl: str) -> set[tuple]:
+    return {(r["id"], r["v"]) for r in P.read_parts(spark, tbl).collect()}
+
+
+def _file_snapshot(root: str) -> set[tuple]:
+    return {
+        (os.path.relpath(os.path.join(d, f), root), os.path.getsize(os.path.join(d, f)),
+         os.stat(os.path.join(d, f)).st_mtime_ns)
+        for d, _, fs in os.walk(root)
+        for f in fs
+    }
+
+
+def _version_doc(local_tbl: str, n: int) -> dict:
+    with open(os.path.join(local_tbl, P.VERSIONS_DIR, f"v{n}.json")) as f:
+        return json.load(f)
+
+
+def test_foreach_batch_maintenance_and_latest_view(spark, tmpdir):
+    """foreachBatch silver maintenance + latest-per-key gold view (ST8/A6):
+    the streamed table and a batch backfill through the SAME transform
+    hold the same rows."""
+    src, silver, bf = f"{tmpdir}/src", f"{tmpdir}/silver", f"{tmpdir}/bf"
+    versions = T.StructType(
+        [
+            T.StructField("idEvent", T.StringType()),
+            T.StructField("score", T.LongType()),
+            T.StructField("updated_at", T.LongType()),
+        ]
+    )
+    _land(src, "a.json", [
+        {"idEvent": e, "score": s, "updated_at": v}
+        for e, s, v in [("E1", 0, 1), ("E1", 2, 3), ("E1", 1, 2), ("E2", 7, 1)]
+    ])
+
+    def transform(df):
+        # W-layer transform shared by backfill and incremental maintenance
+        return df.withColumn("score2", F.col("score") * 2)
+
+    P.create_parts_table(silver, engine="append")
+    _drain(spark, src, silver, f"{tmpdir}/chk", schema=versions, transform=transform)
+
+    silver_df = P.read_parts(spark, silver)
+    assert silver_df.count() == 4
+    assert set(silver_df.columns) == {"idEvent", "score", "updated_at", "score2"}
+    gold = latest_per_key(silver_df, ["idEvent"], ["updated_at"])
+    rows = {r["idEvent"]: (r["score"], r["score2"]) for r in gold.collect()}
+    assert rows == {"E1": (2, 4), "E2": (7, 14)}
+
+    # backfill path shares the same transform
+    P.create_parts_table(bf, engine="append")
+    P.insert_into_parts(transform(spark.read.schema(versions).json(src)), bf)
+    assert sorted(P.read_parts(spark, bf).collect()) == sorted(silver_df.collect())
+
+
+def test_silver_sink_idempotent_on_batch_retry(spark, tmpdir, monkeypatch):
+    """foreachBatch is at-least-once: a retried micro-batch is delivered
+    again under the same batch id. The sink must not double-append — the
+    second delivery is a replay no-op — and business partition columns
+    come back as plain columns."""
+    src, silver = f"{tmpdir}/src", f"{tmpdir}/silver"
+    schema = T.StructType(
+        [T.StructField("id", T.StringType()), T.StructField("month", T.StringType())]
+    )
+    P.create_parts_table(silver, engine="append", partition_col="month")
+    real = parts_stream.insert_into_parts
+    results = []
+
+    def _delivered_twice(df, path, **kw):
+        results.append(real(df, path, **kw))
+        results.append(real(df, path, **kw))  # the retry of the same batch
+
+    monkeypatch.setattr(parts_stream, "insert_into_parts", _delivered_twice)
+    _land(src, "a.json", [{"id": "E1", "month": "202601"}, {"id": "E2", "month": "202602"}])
+    _drain(spark, src, silver, f"{tmpdir}/chk", schema=schema)
+    _land(src, "b.json", [{"id": "E3", "month": "202601"}])
+    _drain(spark, src, silver, f"{tmpdir}/chk", schema=schema)
+
+    assert [r["replayed"] for r in results] == [False, True, False, True]
+    assert P.current_version(silver) == 2
+    assert P.table_history(silver)[-1]["batch_ids"] == [0, 1]
+    out = P.read_parts(spark, silver)
+    assert set(out.columns) == {"id", "month"}
+    assert sorted(r["id"] for r in out.collect()) == ["E1", "E2", "E3"]
+    assert out.filter(F.col("month") == 202601).count() == 2
+
+
+def test_silver_reader_sees_only_committed_batches(spark, tmpdir, monkeypatch):
+    """A reader concurrent with an in-flight streamed batch sees only whole
+    committed batches: at the instant of batch 1's version commit its
+    part is on disk but invisible; once the commit lands the whole batch
+    appears at once."""
+    src, silver = f"{tmpdir}/src", f"{tmpdir}/silver"
+    P.create_parts_table(silver, engine="append")
+    _land(src, "a.json", [{"id": "E1", "v": 1}, {"id": "E2", "v": 2}])
+    _drain(spark, src, silver, f"{tmpdir}/chk")
+
+    real_io_for = P.io_for
+    seen = []
+
+    class _ReadBeforeCommit:
+        def __init__(self, inner):
+            self._inner = inner
+
+        def write_exclusive(self, *a, **k):
+            seen.append(
+                (_rows(spark, silver), len(os.listdir(os.path.join(silver, P.PARTS_DIR))))
+            )
+            return self._inner.write_exclusive(*a, **k)
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+    def _patched(path):
+        io, base = real_io_for(path)
+        return _ReadBeforeCommit(io), base
+
+    monkeypatch.setattr(P, "io_for", _patched)
+    _land(src, "b.json", [{"id": "E3", "v": 3}, {"id": "E4", "v": 4}])
+    _drain(spark, src, silver, f"{tmpdir}/chk")
+    monkeypatch.setattr(P, "io_for", real_io_for)
+
+    # one commit, observed with batch 1's part written but not yet visible
+    assert seen == [({("E1", 1), ("E2", 2)}, 2)], "uncommitted batch leaked"
+    assert _rows(spark, silver) == {("E1", 1), ("E2", 2), ("E3", 3), ("E4", 4)}
+
+
+def _crash_before_commit(spark, root: str, local: str, monkeypatch) -> None:
+    """The batch's part lands, the process dies before the version commit:
+    the batch stays invisible, and the stream restarted over the same
+    checkpoint retries it and commits it exactly once."""
+    tbl, local_tbl = f"{root}/silver_crash1", os.path.join(local, "silver_crash1")
+    src, chk = os.path.join(local, "src_crash1"), os.path.join(local, "chk_crash1")
+    P.create_parts_table(tbl, engine="append")
+    _land(src, "a.json", [{"id": "E1", "v": 1}])
+    _drain(spark, src, tbl, chk)
+
+    real_io_for = P.io_for
+
+    class _Boom:
+        def __init__(self, inner):
+            self._inner = inner
+
+        def __getattr__(self, name):
+            if name == "write_exclusive":
+                raise RuntimeError("injected crash before version commit")
+            return getattr(self._inner, name)
+
+    def _patched(path):
+        io, base = real_io_for(path)
+        return _Boom(io), base
+
+    monkeypatch.setattr(P, "io_for", _patched)
+    _land(src, "b.json", [{"id": "E2", "v": 2}, {"id": "E3", "v": 3}])
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        _drain(spark, src, tbl, chk)
+    monkeypatch.setattr(P, "io_for", real_io_for)
+
+    # the part is on disk, but batch 1 is NOT committed and NOT visible
+    assert len(os.listdir(os.path.join(local_tbl, P.PARTS_DIR))) == 2
+    assert P.table_history(tbl)[-1]["batch_ids"] == [0]
+    assert _rows(spark, tbl) == {("E1", 1)}, "half-committed batch leaked to readers"
+    assert not os.path.exists(os.path.join(chk, "commits", "1"))
+
+    # restart over the same checkpoint: Spark re-runs batch 1, once
+    _drain(spark, src, tbl, chk)
+    assert os.path.exists(os.path.join(chk, "commits", "1"))
+    assert P.table_history(tbl)[-1]["batch_ids"] == [0, 1]
+    assert P.current_version(tbl) == 2
+    assert _rows(spark, tbl) == {("E1", 1), ("E2", 2), ("E3", 3)}
+    assert P.read_parts(spark, tbl).count() == 3
+
+
+def _crash_after_commit(spark, root: str, local: str, monkeypatch) -> None:
+    """The batch's version commit lands, the process dies before the
+    streaming checkpoint records the batch: the restarted stream retries
+    it, and the retry writes no part and touches no committed file."""
+    tbl, local_tbl = f"{root}/silver_crash2", os.path.join(local, "silver_crash2")
+    src, chk = os.path.join(local, "src_crash2"), os.path.join(local, "chk_crash2")
+    P.create_parts_table(tbl, engine="append")
+    _land(src, "a.json", [{"id": "E1", "v": 1}])
+    _drain(spark, src, tbl, chk)
+
+    real = parts_stream.insert_into_parts
+
+    def _commit_then_die(df, path, **kw):
+        real(df, path, **kw)
+        raise RuntimeError("injected crash before checkpoint commit")
+
+    monkeypatch.setattr(parts_stream, "insert_into_parts", _commit_then_die)
+    _land(src, "b.json", [{"id": "E2", "v": 2}])
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        _drain(spark, src, tbl, chk)
+    assert not os.path.exists(os.path.join(chk, "commits", "1"))
+    assert P.table_history(tbl)[-1]["batch_ids"] == [0, 1]
+    parts_dir = os.path.join(local_tbl, P.PARTS_DIR)
+    dirs_before = sorted(os.listdir(parts_dir))
+    files_before = _file_snapshot(parts_dir)
+    assert any(f[0].endswith(".parquet") for f in files_before)
+
+    retried = []
+
+    def _record(df, path, **kw):
+        retried.append(real(df, path, **kw))
+
+    monkeypatch.setattr(parts_stream, "insert_into_parts", _record)
+    _drain(spark, src, tbl, chk)
+    monkeypatch.setattr(parts_stream, "insert_into_parts", real)
+
+    assert [r["replayed"] for r in retried] == [True]
+    assert os.path.exists(os.path.join(chk, "commits", "1"))
+    assert sorted(os.listdir(parts_dir)) == dirs_before
+    assert _file_snapshot(parts_dir) == files_before, "retry rewrote a committed part"
+    assert P.current_version(tbl) == 2
+    assert _rows(spark, tbl) == {("E1", 1), ("E2", 2)}
+
+
+@pytest.mark.parametrize("scheme", ["", "file:"])
+def test_crash_between_data_write_and_manifest(spark, tmpdir, scheme, monkeypatch):
+    """Crash leg 1: the part data lands, the version file (the table's
+    commit manifest) does not. The bare path runs the driver-local ``os``
+    backend, the ``file:`` URI the Hadoop FileSystem backend."""
+    _crash_before_commit(spark, f"{scheme}{tmpdir}", tmpdir, monkeypatch)
+
+
+@pytest.mark.parametrize("scheme", ["", "file:"])
+def test_crash_between_manifest_and_checkpoint_skips_rewrite(spark, tmpdir, scheme, monkeypatch):
+    """Crash leg 2: the version file landed, the streaming checkpoint did
+    not advance, so Spark retries the batch."""
+    _crash_after_commit(spark, f"{scheme}{tmpdir}", tmpdir, monkeypatch)
+
+
+def test_crash_injection_on_viewfs_scheme(spark, viewfs_root, monkeypatch):
+    """Both crash legs through the real Hadoop backend on a registered
+    non-``file`` scheme (ViewFileSystem)."""
+    root, local = viewfs_root
+    _crash_before_commit(spark, root, local, monkeypatch)
+    _crash_after_commit(spark, root, local, monkeypatch)
+
+
+def test_foreach_batch_stamps_stream_identity(spark, tmpdir):
+    """Over the Hadoop (``file:``) backend: the sink derives its txn app id
+    from the query id Spark persists in the checkpoint and stamps it into
+    the version log. A second stream with a RESET checkpoint (new query
+    id, batch ids restart at 0) commits under its own namespace, so its
+    batch 0 re-ingests instead of being skipped as a replay."""
+    src, local_tbl = f"{tmpdir}/src", f"{tmpdir}/silver_ident"
+    silver = f"file:{local_tbl}"
+    P.create_parts_table(silver, engine="append")
+    _land(src, "a.json", [{"id": "E1", "v": 1}])
+
+    first = _drain(spark, src, silver, f"{tmpdir}/chk_ident")
+    assert checkpoint_query_id(f"{tmpdir}/chk_ident") == first
+    assert _version_doc(local_tbl, 1)["txns"] == {first: [0]}
+
+    second = _drain(spark, src, silver, f"{tmpdir}/chk_ident_RESET")
+    assert second != first
+    assert _version_doc(local_tbl, 2)["txns"] == {first: [0], second: [0]}
+    assert P.read_parts(spark, silver).count() == 2
