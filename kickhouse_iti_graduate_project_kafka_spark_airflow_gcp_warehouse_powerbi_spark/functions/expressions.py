@@ -93,6 +93,26 @@ def payload_hash(
     return F.sha2(F.to_json(F.struct(*[field(c) for c in ordered])), 256)
 
 
+def plausible_or_kafka_epoch(
+    ingested_at: Column, kafka_ts: Column, min_epoch: float = MIN_VALID_EPOCH
+) -> Column:
+    """The first two links of the timestamp repair chain (reference:
+    validate_json.py:73-84): ``ingested_at`` if it is a believable epoch
+    (> 2020-01-01), else the Kafka timestamp, else NULL. Epoch seconds as
+    double. A pure function of the row — no "now" — so a projection built
+    from it is the same expression in every query execution."""
+    plausible = F.when(ingested_at > F.lit(min_epoch), ingested_at)
+    return F.coalesce(plausible, F.unix_timestamp(kafka_ts).cast("double"))
+
+
+def now_epoch() -> Column:
+    """The repair chain's last link: "now" as epoch seconds (double).
+    Spark folds ``current_timestamp()`` into a literal once per query
+    execution — once per micro-batch in a stream — so any projection that
+    holds this expression differs from batch to batch."""
+    return F.unix_timestamp(F.current_timestamp()).cast("double")
+
+
 def repair_ingested_at(
     ingested_at: Column, kafka_ts: Column, min_epoch: float = MIN_VALID_EPOCH
 ) -> Column:
@@ -102,9 +122,7 @@ def repair_ingested_at(
     otherwise fall back to the Kafka timestamp; otherwise "now".
     Returns epoch seconds as double.
     """
-    plausible = F.when(ingested_at > F.lit(min_epoch), ingested_at)
-    from_kafka = F.unix_timestamp(kafka_ts).cast("double")
-    return F.coalesce(plausible, from_kafka, F.unix_timestamp(F.current_timestamp()).cast("double"))
+    return F.coalesce(plausible_or_kafka_epoch(ingested_at, kafka_ts, min_epoch), now_epoch())
 
 
 def required_fields_ok(

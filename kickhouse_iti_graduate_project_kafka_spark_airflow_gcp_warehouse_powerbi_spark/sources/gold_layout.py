@@ -68,7 +68,6 @@ def compact_partitions(
 
     Returns {files_before, files_after, rows} for observability.
     """
-    import glob as _glob
     import math
 
     df = spark.read.parquet(path)
@@ -77,9 +76,16 @@ def compact_partitions(
     rows = df.count()
     if rows == 0:
         return {"files_before": 0, "files_after": 0, "rows": 0}
+    io, base = io_for(path)
 
     def _count_files() -> int:
-        return len(_glob.glob(f"{path}/*/*.parquet"))
+        # through the storage backend, so URI tables count like local ones
+        return sum(
+            name.endswith(".parquet") and not name.startswith(".")
+            for entry in io.list_names(base)
+            if "=" in entry
+            for name in io.list_names(join(io, base, entry))
+        )
 
     before = _count_files()
     n_files = max(1, math.ceil(rows / target_rows_per_file))

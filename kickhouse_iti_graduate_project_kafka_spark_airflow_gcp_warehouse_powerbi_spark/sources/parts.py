@@ -89,6 +89,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .storage import io_for, join
 
@@ -506,19 +507,33 @@ def _live_partition_dirs(io, base: str, p: dict, pcol: str) -> list[str] | None:
     ]
 
 
-def _read_part_df(spark: SparkSession, io, base: str, p: dict, pcol: str | None):
-    """Read one live part, honoring its ``skip`` list by reading ONLY the
-    still-live partition subdirectories (a pure metadata restriction —
-    ``basePath`` keeps the partition column; no filter, no scan of the
-    skipped data). Returns None when every partition is skipped (such
-    parts are normally dropped from the version doc at commit time)."""
+def _recorded_schema(io, base: str) -> T.StructType | None:
+    """The row schema recorded at first insert (None for a table written
+    before the schema file existed)."""
+    text = io.read_text(join(io, base, SCHEMA_META))
+    return None if text is None else T.StructType.fromJson(json.loads(text))
+
+
+def _read_part_df(
+    spark: SparkSession, io, base: str, p: dict, pcol: str | None,
+    schema: T.StructType | None,
+):
+    """Read one live part with the table's recorded ``schema``, honoring
+    its ``skip`` list by reading ONLY the still-live partition
+    subdirectories (a pure metadata restriction — ``basePath`` keeps the
+    partition column; no filter, no scan of the skipped data). The schema
+    keeps the partition column's type: without it Spark infers the type
+    from the directory names, and a string ``"202601"`` reads back as an
+    integer. Returns None when every partition is skipped (such parts are
+    normally dropped from the version doc at commit time)."""
     d = join(io, base, PARTS_DIR, p["name"])
+    reader = spark.read if schema is None else spark.read.schema(schema)
     if not p.get("skip") or not pcol:
-        return spark.read.parquet(d)
+        return reader.parquet(d)
     live = _live_partition_dirs(io, base, p, pcol)
     if not live:
         return None
-    return spark.read.option("basePath", d).parquet(*live)
+    return reader.option("basePath", d).parquet(*live)
 
 
 def read_parts(
@@ -561,21 +576,19 @@ def read_parts(
         raise FileNotFoundError(f"parts table at {path} has no committed version")
     doc = _read_version(io, base, ver)
     parts = doc["parts"]
+    schema = _recorded_schema(io, base)
     if not parts:
         # a legitimately empty table (full OPTIMIZE whose rows all
         # TTL-expired or pair-cancelled, or a mutation that deleted
         # everything) stays READABLE: hand back an empty frame with the
         # schema recorded at first insert, like ClickHouse's empty result
-        from pyspark.sql import types as T
-
-        schema_txt = io.read_text(join(io, base, SCHEMA_META))
-        if schema_txt is None:  # pre-schema-file table: can't conjure one
+        if schema is None:  # pre-schema-file table: can't conjure one
             raise FileNotFoundError(f"version {ver} of {path} is empty")
-        return spark.createDataFrame([], T.StructType.fromJson(json.loads(schema_txt)))
+        return spark.createDataFrame([], schema)
 
     legs = []
     for p in sorted(parts, key=lambda q: q["seq"]):
-        leg = _read_part_df(spark, io, base, p, meta.get("partition_col"))
+        leg = _read_part_df(spark, io, base, p, meta.get("partition_col"), schema)
         if leg is None:
             continue
         legs.append(leg.withColumn("_part_seq", F.lit(int(p["seq"]))))
@@ -845,8 +858,9 @@ def optimize_parts(
         return {"version": ver, "merged": 0}
 
     legs = []
+    schema = _recorded_schema(io, base)
     for p in merge:
-        leg = _read_part_df(spark, io, base, p, meta.get("partition_col"))
+        leg = _read_part_df(spark, io, base, p, meta.get("partition_col"), schema)
         if leg is not None:
             legs.append(leg.withColumn("_part_seq", F.lit(int(p["seq"]))))
     df = legs[0]
@@ -1220,8 +1234,9 @@ def mutate_parts(
 
     new_parts = []
     rewritten = dropped = 0
+    schema = _recorded_schema(io, base)
     for p in parts:
-        df = _read_part_df(spark, io, base, p, meta.get("partition_col"))
+        df = _read_part_df(spark, io, base, p, meta.get("partition_col"), schema)
         if df is None:
             dropped += 1
             continue
@@ -1235,9 +1250,14 @@ def mutate_parts(
         if set_exprs:
             cond = update_where or "true"
             for col, expr in set_exprs.items():
+                # the new value takes the column's type (ClickHouse's
+                # ALTER UPDATE casts too), so the part still reads with the
+                # table schema
                 out = out.withColumn(
                     col,
-                    F.when(F.expr(cond), F.expr(expr)).otherwise(F.col(col)),
+                    F.when(F.expr(cond), F.expr(expr))
+                    .otherwise(F.col(col))
+                    .cast(df.schema[col].dataType),
                 )
         if out.isEmpty():
             dropped += 1

@@ -34,6 +34,7 @@ import posixpath
 import tempfile
 import uuid
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -218,9 +219,14 @@ class HadoopIO:
     def rename(self, src: str, dst: str) -> None:
         """Plain ``FileSystem.rename`` (an atomic directory move on
         HDFS/local) for callers that swap directories by renaming onto a
-        path proven absent; a rename the filesystem reports as failed
-        raises."""
-        if not self._fs(src).rename(self._jpath(src), self._jpath(dst)):
+        path proven absent. A rename the filesystem reports as failed, or
+        refuses with a Java exception (a missing source on LocalFileSystem
+        throws ``FileNotFoundException``), raises ``OSError``."""
+        try:
+            ok = self._fs(src).rename(self._jpath(src), self._jpath(dst))
+        except Py4JJavaError as e:
+            raise OSError(f"rename failed: {src} -> {dst}") from e
+        if not ok:
             raise OSError(f"rename failed: {src} -> {dst}")
 
     def rmtree(self, p: str) -> None:

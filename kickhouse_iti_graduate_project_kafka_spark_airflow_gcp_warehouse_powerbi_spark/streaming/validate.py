@@ -33,8 +33,9 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.expressions import (
     composite_pk,
+    now_epoch,
     payload_hash,
-    repair_ingested_at,
+    plausible_or_kafka_epoch,
     required_fields_ok,
     sport_ok,
 )
@@ -93,7 +94,7 @@ def _routed_columns(
     data: str,
     payload_schema: T.StructType,
     required: list[str],
-    type_pattern: str,
+    type_pattern: str | None,
     pk_cols: list[str],
     sport_field: str | None,
     sport_pattern: str,
@@ -101,8 +102,17 @@ def _routed_columns(
     """The P4-P12 expressions of one entity over its parsed payload struct
     (the column named ``data``) and the envelope columns (topic, entity,
     json_str, timestamp): the routed row (topic, key, value, payload_sha,
-    evt_ts, is_valid, parse_ok). Shared by :func:`validate_messages` and
+    evt_epoch, is_valid, parse_ok), which :func:`_stamp_batch_time` turns
+    into the output columns. Shared by :func:`validate_messages` and
     :func:`validate_all_entities`, so both route by the same rules.
+    ``type_pattern`` whitelists the entity named by the topic; ``None``
+    skips the check (a caller that already demuxed by entity).
+
+    Nothing here may depend on the micro-batch: no "now", no batch id. The
+    13-entity routing projection is too wide for whole-stage codegen
+    (``spark.sql.codegen.maxFields``), so each task compiles it as one
+    large ``UnsafeProjection`` class; a per-batch literal inlined into it
+    would miss the codegen cache and recompile it on every micro-batch.
 
     Each payload field Column is built once and shared by every expression
     reading it: every Column operation is a round trip to the JVM, and this
@@ -115,18 +125,16 @@ def _routed_columns(
         return fields[path] if path in fields else F.col(f"{data}.{path}")
 
     parse_ok = field("_corrupt").isNull()  # P5
-    is_valid = (
-        parse_ok
-        & required_fields_ok(required, field=field)  # P8
-        & sport_ok("entity", type_pattern)  # entity whitelist
-    )
+    is_valid = parse_ok & required_fields_ok(required, field=field)  # P8
+    if type_pattern is not None:
+        is_valid = is_valid & sport_ok("entity", type_pattern)  # entity whitelist
     if sport_field is not None:
         is_valid = is_valid & sport_ok(field(sport_field), sport_pattern)  # P9
 
-    ingested = repair_ingested_at(
+    evt_epoch = plausible_or_kafka_epoch(
         fields["ingested_at"] if "ingested_at" in fields else F.lit(None).cast("double"),
         F.col("timestamp"),
-    )  # P6
+    )  # P6 without its "now" link, which _stamp_batch_time adds
     return [
         # S2 routing: prefix the FULL original topic (reference emits
         # 'validated.soccer.event', validate_json.py:610-628) so the
@@ -144,9 +152,28 @@ def _routed_columns(
         # re-sent payload with a fresh ingested_at must hash identically
         # or the dedup below silently no-ops
         payload_hash(business_cols, exclude=HASH_EXCLUDE, field=field).alias("payload_sha"),
-        F.to_timestamp(F.from_unixtime(ingested)).alias("evt_ts"),
+        evt_epoch.alias("evt_epoch"),
         is_valid.alias("is_valid"),
         parse_ok.alias("parse_ok"),
+    ]
+
+
+def _stamp_batch_time(row: str = "") -> list[Column]:
+    """The output columns (topic, key, value, payload_sha, evt_ts,
+    is_valid, parse_ok) over the routed columns of :func:`_routed_columns`
+    (fields of the struct column ``row``, or top-level columns when
+    ``row`` is empty). P6's last link lives here, in a projection of its
+    own, so the routing projection below it holds no per-batch value:
+    ``evt_ts`` is the row's plausible-or-Kafka epoch, else the batch's
+    "now", as a timestamp truncated to seconds — the value the whole chain
+    ``to_timestamp(from_unixtime(repair_ingested_at(...)))`` gives."""
+    prefix = f"{row}." if row else ""
+    epoch = F.coalesce(F.col(f"{prefix}evt_epoch"), now_epoch())
+    return [
+        *(F.col(f"{prefix}{c}") for c in ("topic", "key", "value", "payload_sha")),
+        F.to_timestamp(F.from_unixtime(epoch)).alias("evt_ts"),
+        F.col(f"{prefix}is_valid"),
+        F.col(f"{prefix}parse_ok"),
     ]
 
 
@@ -209,7 +236,7 @@ def validate_messages(
             "data", payload_schema, required, type_pattern,
             pk_cols or required, sport_field, sport_pattern,
         )
-    )
+    ).select(*_stamp_batch_time())
     return _dedup(out, ["key", "payload_sha"]) if dedup else out
 
 
@@ -228,8 +255,13 @@ def validate_all_entities(
     - one projection holds a ``from_json`` per entity, each guarded by
       ``entity == e``, so a message is parsed only against its own schema;
     - the per-entity routed rows (same expressions as :func:`validate_messages`)
-      are coalesced into one (topic, key, value, payload_sha, evt_ts,
-      is_valid, parse_ok) shape.
+      are coalesced into one (topic, key, value, payload_sha, evt_epoch,
+      is_valid, parse_ok) struct; the entity whitelist of
+      :func:`validate_messages` is skipped, since the ``isin`` filter and
+      the ``entity == e`` guard already pin the entity;
+    - a small projection above the coalesce reads the struct's fields and
+      adds P6's batch-time fallback (:func:`_stamp_batch_time`), so the
+      wide routing projection holds no per-batch value.
 
     The parse and routing are narrow. With ``dedup`` the rows pass ONE
     watermark and ONE dedup keyed on (entity, key, payload_sha) — the same
@@ -270,7 +302,7 @@ def validate_all_entities(
                         f"_data{i}",
                         entity_schema(e),
                         REQUIRED_FIELDS[e],
-                        type_pattern=f"(?i)^{e.replace('.', chr(92) + '.')}$",
+                        type_pattern=None,
                         pk_cols=PRIMARY_KEYS[e],
                         sport_field=SPORT_FIELD.get(e),
                         sport_pattern=SPORT_PATTERN,
@@ -280,7 +312,9 @@ def validate_all_entities(
             for i, (e, hit) in enumerate(zip(entities, is_entity))
         ]
     )
-    out = parsed.select(row.alias("_row"), "entity").select("_row.*", "entity")
+    out = parsed.select(row.alias("_row"), "entity").select(
+        *_stamp_batch_time("_row"), "entity"
+    )
     if dedup:
         out = _dedup(out, ["entity", "key", "payload_sha"])
     return out.drop("entity")

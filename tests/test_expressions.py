@@ -13,6 +13,7 @@ from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_sp
     multi_if,
     null_if_zero_key,
     payload_hash,
+    plausible_or_kafka_epoch,
     repair_ingested_at,
     required_fields_ok,
     sport_ok,
@@ -125,3 +126,16 @@ def test_repair_ingested_at_chain(spark):
     assert out[0]["r"] == 1767225600.0
     assert out[1]["r"] == 1767225600.0  # kafka-ts fallback (UTC session)
     assert out[2]["r"] is not None  # now() fallback
+
+
+def test_plausible_or_kafka_epoch_has_no_now_link(spark):
+    """The row-only part of the repair chain: NULL where repair_ingested_at
+    would fall back to now(); the same value everywhere else."""
+    df = spark.createDataFrame(
+        [(1767225600.0, None), (5.0, "2026-01-01 00:00:00"), (5.0, None)],
+        "ing double, kts string",
+    )
+    out = df.select(
+        plausible_or_kafka_epoch(F.col("ing"), F.to_timestamp("kts")).alias("p")
+    ).collect()
+    assert [r["p"] for r in out] == [1767225600.0, 1767225600.0, None]

@@ -51,6 +51,23 @@ def test_compaction_shrinks_files_preserves_rows(spark, sf_small, tmp_path):
     assert checksum_after == checksum_before
 
 
+def test_compaction_counts_files_on_every_scheme(spark, scheme_root):
+    """files_before/files_after count the table's data files through the
+    storage backend: a ``file:`` or viewfs table reports the same counts
+    as a bare path (3 writer tasks x 2 months = 6 files, then 1 per month)."""
+    root, _local = scheme_root
+    path = f"{root}/t"
+    (
+        spark.range(100)
+        .select((F.col("id") % 2).cast("string").alias("month"), F.col("id").alias("v"))
+        .repartition(3)
+        .write.partitionBy("month")
+        .parquet(path)
+    )
+    stats = compact_partitions(spark, path, "month", ["v"])
+    assert stats == {"files_before": 6, "files_after": 2, "rows": 100}
+
+
 def test_compaction_with_predicate_touches_only_matching(spark, sf_small, tmp_path):
     path = str(tmp_path / "gold_orders2")
     _fragmented_table(spark, sf_small, path)

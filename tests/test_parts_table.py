@@ -339,6 +339,41 @@ def test_partitioned_parts_prune_on_read(spark, tbl):
     assert "o_status" in plan
 
 
+def test_string_partition_column_round_trips_with_recorded_type(spark, tbl):
+    """A partition column reads back with the type recorded at first
+    insert, not the one Spark would infer from the directory names: a
+    string "202601" stays a string (and "007" keeps its zeros) through
+    read_parts, a partial OPTIMIZE, a partition OPTIMIZE (whose merged-away
+    partitions the old parts skip-list) and a mutation."""
+    P.create_parts_table(tbl, engine="append", partition_col="month")
+
+    def rows(data):
+        return spark.createDataFrame(data, "id string, month string, v int")
+
+    P.insert_into_parts(rows([("a", "202601", 1), ("b", "007", 2)]), tbl)
+    P.insert_into_parts(rows([("c", "202601", 3)]), tbl)
+    P.insert_into_parts(rows([("d", "202602", 4)]), tbl)
+
+    def read():
+        df = P.read_parts(spark, tbl)
+        assert dict(df.dtypes) == {"id": "string", "month": "string", "v": "int"}
+        return sorted((r.id, r.month, r.v) for r in df.collect())
+
+    want = [("a", "202601", 1), ("b", "007", 2), ("c", "202601", 3), ("d", "202602", 4)]
+    assert read() == want
+    P.optimize_parts(spark, tbl, max_seq=2)
+    assert read() == want
+    P.insert_into_parts(rows([("e", "202602", 5)]), tbl)
+    P.optimize_partitions(spark, tbl, ["202602"])
+    want.append(("e", "202602", 5))
+    assert read() == want
+    P.mutate_parts(spark, tbl, set_exprs={"v": "v * 10.0"}, update_where="id = 'a'")
+    P.mutate_parts(spark, tbl, delete_where="month = '007'")
+    assert read() == [
+        ("a", "202601", 10), ("c", "202601", 3), ("d", "202602", 4), ("e", "202602", 5),
+    ]
+
+
 def test_commit_race_retries_to_next_version(spark, tbl):
     """Simulate a concurrent committer by pre-creating the version file
     the insert will try first: the optimistic loop must land at the next

@@ -166,6 +166,17 @@ def test_hadoop_exists_rename_and_rmtree(spark, scheme_dir):
     assert not os.path.exists(os.path.join(local, "c"))
 
 
+def test_hadoop_rename_of_missing_source_raises_oserror(spark, scheme_dir):
+    """A rename whose source is missing raises the backend's own OSError on
+    every scheme, whether the filesystem returns false or throws."""
+    d, local = scheme_dir
+    fs = S.HadoopIO(spark)
+    fs.mkdirs(d)
+    with pytest.raises(OSError, match="rename failed"):
+        fs.rename(f"{d}/missing", f"{d}/c")
+    assert not os.path.exists(os.path.join(local, "c"))
+
+
 def test_checkpoint_query_id_derivation(tmp_path):
     """The parts sinks' default app id: the streaming query id Spark
     persists at <checkpoint>/metadata — stable across restarts,

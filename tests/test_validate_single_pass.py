@@ -270,3 +270,90 @@ def test_routed_plan_is_one_pass(spark, tmpdir):
     assert optimized.count("from_json(") == len(ENTITIES)
     assert physical.count("StreamingDeduplicateWithinWatermark") == 1
     assert physical.count("FileScan json") == 1
+
+
+def test_evt_ts_falls_back_to_batch_time(spark):
+    """P6's last link: a message with no plausible ingested_at and no Kafka
+    timestamp gets the batch's current_timestamp(), truncated to seconds;
+    a plausible ingested_at or a Kafka timestamp still wins. Pinned on both
+    routing shapes, in one query each with the batch time alongside."""
+    msgs = spark.createDataFrame(
+        [
+            ("soccer.event", None, json.dumps({"idEvent": "N1", "strSport": "Soccer",
+                                               "ingested_at": 5.0}), None),
+            ("soccer.event", None, json.dumps({"idEvent": "N2"}), None),
+            ("soccer.event", None, json.dumps({"idEvent": "N3",
+                                               "ingested_at": BASE_TS + 0.9}), None),
+            ("soccer.event", None, json.dumps({"idEvent": "N4", "ingested_at": 5.0}), KAFKA_TS),
+        ],
+        schema=ENVELOPE,
+    )
+    one_entity = validate_messages(
+        msgs, entity_schema("event"), REQUIRED_FIELDS["event"], type_pattern="(?i)^event$",
+        pk_cols=PRIMARY_KEYS["event"], sport_field=SPORT_FIELD.get("event"),
+    )
+    for routed in (validate_all_entities(msgs), one_entity):
+        rows = routed.select(
+            "key", "evt_ts", F.date_trunc("second", F.current_timestamp()).alias("now")
+        ).collect()
+        got = {r["key"]: r["evt_ts"] for r in rows}
+        (now,) = {r["now"] for r in rows}
+        assert got == {
+            "N1": now,
+            "N2": now,
+            "N3": datetime.fromtimestamp(int(BASE_TS)),
+            "N4": KAFKA_TS,
+        }
+
+
+def _routing_project(plan):
+    """The optimized plan's Project that builds the coalesced ``_row``
+    struct of the 13 per-entity routings."""
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "Project":
+            exprs = node.projectList()
+            if any(exprs.apply(i).name() == "_row" for i in range(exprs.size())):
+                return node
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    raise AssertionError("no routing Project in the plan")
+
+
+def test_routing_projection_is_batch_invariant(spark, tmpdir):
+    """The wide routing Project is the same expression in every micro-batch.
+    It is too wide for whole-stage codegen, so each task compiles it as one
+    large generated class; a per-batch literal inside it (the value Spark
+    substitutes for current_timestamp()) would miss the codegen cache and
+    recompile that class on every batch."""
+    src = os.path.join(tmpdir, "src")
+    os.makedirs(src)
+    stream = spark.readStream.schema(ENVELOPE).option("maxFilesPerTrigger", 1).json(src)
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")  # keep each data batch as lastExecution
+    projections, counts = [], []
+    try:
+        q = (
+            validate_all_entities(stream)
+            .writeStream.format("memory")
+            .queryName("onepass_invariant")
+            .option("checkpointLocation", os.path.join(tmpdir, "chk"))
+            .start()
+        )
+        try:
+            for i in range(2):
+                _land(src, i, [_msg(e, {"idEvent": str(i), "ingested_at": BASE_TS + i})
+                               for e in ENTITIES])
+                q.processAllAvailable()
+                project = _routing_project(q._jsq.streamingQuery().lastExecution().optimizedPlan())
+                # canonicalized: attribute ids normalized to child ordinals
+                projections.append(project.canonicalized().projectList().toString())
+                counts.append(spark.sql("SELECT COUNT(*) FROM onepass_invariant").first()[0])
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set(key, prev)
+    assert counts[0] == len(ENTITIES) < counts[1]  # both batches routed rows
+    assert projections[0] == projections[1]

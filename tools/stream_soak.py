@@ -25,7 +25,9 @@ order-insensitive xxhash64 XOR over every output column.
     python tools/stream_soak.py --sf-dir .benchdata/sf1 --tag r11_sf1 \
         --kills 15,35
 
-Writes sweeps/stream_soak_<tag>.json:
+Writes stream_soak_<tag>.json into ``--work-dir`` when one is given (the
+soak's tables, checkpoints and logs there are removed at the end), else
+into sweeps/:
     {"input_rows": N, "batches_committed": B, "kills": K, "restarts": K+1,
      "append_equal": true, "parts_equal": true, ...}
 """
@@ -179,7 +181,12 @@ def main() -> int:
         help="seconds into each worker life at which to SIGKILL it; after "
         "the list is exhausted the worker runs to completion",
     )
-    ap.add_argument("--work-dir", default="")
+    ap.add_argument(
+        "--work-dir",
+        default="",
+        help="scratch directory, emptied at start; receives the result JSON "
+        "(default: .benchdata/soak_<tag>, result into sweeps/)",
+    )
     ap.add_argument("--events-dir", default="", help=argparse.SUPPRESS)
     ap.add_argument("--worker", action="store_true", help=argparse.SUPPRESS)
     args = ap.parse_args()
@@ -286,11 +293,20 @@ def main() -> int:
         "parts_equal": (n_got_p, h_got_p) == (n_want_p, h_want_p),
         "suite_secs": round(time.perf_counter() - t_suite, 1),
     }
-    path = os.path.join(REPO, "sweeps", f"stream_soak_{args.tag}.json")
+    out_dir = args.work_dir or os.path.join(REPO, "sweeps")
+    path = os.path.join(out_dir, f"stream_soak_{args.tag}.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print(json.dumps(out))
-    shutil.rmtree(work, ignore_errors=True)
+    # drop the soak's tables, checkpoints and logs; keep the result
+    for name in os.listdir(work):
+        entry = os.path.join(work, name)
+        if os.path.isdir(entry):
+            shutil.rmtree(entry)
+        elif entry != path:
+            os.remove(entry)
+    if not os.listdir(work):
+        os.rmdir(work)
     return 0 if out["append_equal"] and out["parts_equal"] else 1
 
 
