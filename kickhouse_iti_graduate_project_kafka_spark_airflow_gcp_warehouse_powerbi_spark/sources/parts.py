@@ -514,26 +514,44 @@ def _recorded_schema(io, base: str) -> T.StructType | None:
     return None if text is None else T.StructType.fromJson(json.loads(text))
 
 
+def _partition_type(io, base: str, pcol: str | None) -> T.DataType | None:
+    """The type recorded at first insert for the partition column (None
+    for an unpartitioned table or one without a schema file)."""
+    schema = _recorded_schema(io, base) if pcol else None
+    if schema is None or pcol not in schema.fieldNames():
+        return None
+    return schema[pcol].dataType
+
+
 def _read_part_df(
     spark: SparkSession, io, base: str, p: dict, pcol: str | None,
-    schema: T.StructType | None,
+    pcol_type: T.DataType | None,
 ):
-    """Read one live part with the table's recorded ``schema``, honoring
-    its ``skip`` list by reading ONLY the still-live partition
-    subdirectories (a pure metadata restriction — ``basePath`` keeps the
-    partition column; no filter, no scan of the skipped data). The schema
-    keeps the partition column's type: without it Spark infers the type
-    from the directory names, and a string ``"202601"`` reads back as an
-    integer. Returns None when every partition is skipped (such parts are
-    normally dropped from the version doc at commit time)."""
+    """Read one live part, honoring its ``skip`` list by reading ONLY the
+    still-live partition subdirectories (a pure metadata restriction —
+    ``basePath`` keeps the partition column; no filter, no scan of the
+    skipped data). Returns None when every partition is skipped (such
+    parts are normally dropped from the version doc at commit time).
+
+    Data columns keep the types the part was written with (merges widen
+    sums; ``unionByName`` widens across parts). Only the partition
+    column, whose type Spark infers from the directory names, is re-read
+    as ``pcol_type`` when the inference differs: a string ``"202601"``
+    would otherwise come back as an integer."""
     d = join(io, base, PARTS_DIR, p["name"])
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    if not p.get("skip") or not pcol:
-        return reader.parquet(d)
-    live = _live_partition_dirs(io, base, p, pcol)
-    if not live:
-        return None
-    return reader.option("basePath", d).parquet(*live)
+    paths, reader = [d], spark.read
+    if p.get("skip") and pcol:
+        paths = _live_partition_dirs(io, base, p, pcol)
+        if not paths:
+            return None
+        reader = reader.option("basePath", d)
+    df = reader.parquet(*paths)
+    if pcol_type is None or df.schema[pcol].dataType == pcol_type:
+        return df
+    schema = T.StructType(
+        [T.StructField(f.name, pcol_type, f.nullable) if f.name == pcol else f for f in df.schema]
+    )
+    return reader.schema(schema).parquet(*paths)
 
 
 def read_parts(
@@ -576,19 +594,21 @@ def read_parts(
         raise FileNotFoundError(f"parts table at {path} has no committed version")
     doc = _read_version(io, base, ver)
     parts = doc["parts"]
-    schema = _recorded_schema(io, base)
     if not parts:
         # a legitimately empty table (full OPTIMIZE whose rows all
         # TTL-expired or pair-cancelled, or a mutation that deleted
         # everything) stays READABLE: hand back an empty frame with the
         # schema recorded at first insert, like ClickHouse's empty result
+        schema = _recorded_schema(io, base)
         if schema is None:  # pre-schema-file table: can't conjure one
             raise FileNotFoundError(f"version {ver} of {path} is empty")
         return spark.createDataFrame([], schema)
 
     legs = []
+    pcol = meta.get("partition_col")
+    pcol_type = _partition_type(io, base, pcol)
     for p in sorted(parts, key=lambda q: q["seq"]):
-        leg = _read_part_df(spark, io, base, p, meta.get("partition_col"), schema)
+        leg = _read_part_df(spark, io, base, p, pcol, pcol_type)
         if leg is None:
             continue
         legs.append(leg.withColumn("_part_seq", F.lit(int(p["seq"]))))
@@ -858,9 +878,10 @@ def optimize_parts(
         return {"version": ver, "merged": 0}
 
     legs = []
-    schema = _recorded_schema(io, base)
+    pcol = meta.get("partition_col")
+    pcol_type = _partition_type(io, base, pcol)
     for p in merge:
-        leg = _read_part_df(spark, io, base, p, meta.get("partition_col"), schema)
+        leg = _read_part_df(spark, io, base, p, pcol, pcol_type)
         if leg is not None:
             legs.append(leg.withColumn("_part_seq", F.lit(int(p["seq"]))))
     df = legs[0]
@@ -1234,9 +1255,9 @@ def mutate_parts(
 
     new_parts = []
     rewritten = dropped = 0
-    schema = _recorded_schema(io, base)
+    pcol_type = _partition_type(io, base, meta.get("partition_col"))
     for p in parts:
-        df = _read_part_df(spark, io, base, p, meta.get("partition_col"), schema)
+        df = _read_part_df(spark, io, base, p, meta.get("partition_col"), pcol_type)
         if df is None:
             dropped += 1
             continue
@@ -1250,14 +1271,9 @@ def mutate_parts(
         if set_exprs:
             cond = update_where or "true"
             for col, expr in set_exprs.items():
-                # the new value takes the column's type (ClickHouse's
-                # ALTER UPDATE casts too), so the part still reads with the
-                # table schema
                 out = out.withColumn(
                     col,
-                    F.when(F.expr(cond), F.expr(expr))
-                    .otherwise(F.col(col))
-                    .cast(df.schema[col].dataType),
+                    F.when(F.expr(cond), F.expr(expr)).otherwise(F.col(col)),
                 )
         if out.isEmpty():
             dropped += 1

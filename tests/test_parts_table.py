@@ -367,11 +367,57 @@ def test_string_partition_column_round_trips_with_recorded_type(spark, tbl):
     P.optimize_partitions(spark, tbl, ["202602"])
     want.append(("e", "202602", 5))
     assert read() == want
-    P.mutate_parts(spark, tbl, set_exprs={"v": "v * 10.0"}, update_where="id = 'a'")
+    P.mutate_parts(spark, tbl, set_exprs={"v": "v * 10"}, update_where="id = 'a'")
     P.mutate_parts(spark, tbl, delete_where="month = '007'")
     assert read() == [
         ("a", "202601", 10), ("c", "202601", 3), ("d", "202602", 4), ("e", "202602", 5),
     ]
+
+
+def test_merges_that_widen_state_types_stay_readable(spark, tbl, tmp_path):
+    """OPTIMIZE writes merged sums wider than the inserted parts: a
+    decimal(p,s) state comes out decimal(p+10,s), an int sum bigint.
+    Merged and fresh parts must keep reading and merging together."""
+    spec = {"n": "sum", "total": "sum"}
+    P.create_parts_table(tbl, engine="aggregating", key_cols=("uid",), agg_spec=spec)
+
+    def states(rows):
+        raw = spark.createDataFrame(rows, "uid long, v double")
+        return P.aggregate_states(
+            raw.selectExpr("uid", "1 AS n", "CAST(v AS decimal(12,2)) AS total"),
+            ("uid",),
+            spec,
+        )
+
+    P.insert_into_parts(states([(1, 1.25), (2, 2.5)]), tbl)
+    P.insert_into_parts(states([(1, 0.75)]), tbl)
+    P.optimize_parts(spark, tbl)
+    P.insert_into_parts(states([(2, 1.0)]), tbl)
+
+    def agg_final():
+        return {(r.uid, r.n, float(r.total)) for r in P.read_parts(spark, tbl, final=True).collect()}
+
+    assert agg_final() == {(1, 2, 2.0), (2, 2, 3.5)}
+    P.optimize_parts(spark, tbl)
+    assert agg_final() == {(1, 2, 2.0), (2, 2, 3.5)}
+
+    stbl = str(tmp_path / "summing")
+    P.create_parts_table(stbl, engine="summing", key_cols=("k",), sum_cols=("c",))
+
+    def counts(rows):
+        return spark.createDataFrame(rows, "k long, c int")
+
+    P.insert_into_parts(counts([(1, 2), (2, 3)]), stbl)
+    P.insert_into_parts(counts([(1, 4)]), stbl)
+    P.optimize_parts(spark, stbl)
+    P.insert_into_parts(counts([(2, 5)]), stbl)
+
+    def sum_final():
+        return {(r.k, r.c) for r in P.read_parts(spark, stbl, final=True).collect()}
+
+    assert sum_final() == {(1, 6), (2, 8)}
+    P.optimize_parts(spark, stbl)
+    assert sum_final() == {(1, 6), (2, 8)}
 
 
 def test_commit_race_retries_to_next_version(spark, tbl):

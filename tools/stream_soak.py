@@ -293,20 +293,14 @@ def main() -> int:
         "parts_equal": (n_got_p, h_got_p) == (n_want_p, h_want_p),
         "suite_secs": round(time.perf_counter() - t_suite, 1),
     }
+    # drop the soak's tables, checkpoints and logs, then write the result
+    shutil.rmtree(work, ignore_errors=True)
     out_dir = args.work_dir or os.path.join(REPO, "sweeps")
+    os.makedirs(out_dir, exist_ok=True)
     path = os.path.join(out_dir, f"stream_soak_{args.tag}.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print(json.dumps(out))
-    # drop the soak's tables, checkpoints and logs; keep the result
-    for name in os.listdir(work):
-        entry = os.path.join(work, name)
-        if os.path.isdir(entry):
-            shutil.rmtree(entry)
-        elif entry != path:
-            os.remove(entry)
-    if not os.listdir(work):
-        os.rmdir(work)
     return 0 if out["append_equal"] and out["parts_equal"] else 1
 
 
