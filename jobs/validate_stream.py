@@ -10,6 +10,10 @@ Kafka mode (production):
 File mode (dev/test, no broker; memory table ``job_routed`` with the views
 ``job_validated`` / ``job_rejected``, whose counts ``--run-for`` prints):
     python jobs/validate_stream.py --source-dir /data/envelopes --checkpoint /chk --run-for 0
+A memory table cannot recover from a checkpoint, so file mode does not
+resume: each run needs a fresh ``--checkpoint`` (it refuses one whose
+``routed/offsets`` already holds batches). Kafka mode resumes where the
+checkpoint left off.
 Broker smoke test (self-skipping):
     python jobs/validate_stream.py --kafka broker:9092 --smoke --checkpoint /chk
 

@@ -29,6 +29,11 @@ from pyspark.sql import functions as F
 #: epoch-seconds floor for believable event times: 2020-01-01T00:00:00Z
 #: (reference: validate_json.py:73-84 timestamp repair chain)
 MIN_VALID_EPOCH = 1577836800.0
+#: epoch-seconds ceiling: 2100-01-01T00:00:00Z. Above it ``from_unixtime``
+#: overflows (1e20: CAST_OVERFLOW) or lands millennia ahead (1e15: year
+#: 124789) and would drag the stream-wide dedup watermark with it. A
+#: constant, so the routing projection stays the same in every batch.
+MAX_VALID_EPOCH = 4102444800.0
 
 
 def decimal_sum(col: str | Column, scale: int = 2, precision: int = 18) -> Column:
@@ -98,10 +103,16 @@ def plausible_or_kafka_epoch(
 ) -> Column:
     """The first two links of the timestamp repair chain (reference:
     validate_json.py:73-84): ``ingested_at`` if it is a believable epoch
-    (> 2020-01-01), else the Kafka timestamp, else NULL. Epoch seconds as
-    double. A pure function of the row — no "now" — so a projection built
-    from it is the same expression in every query execution."""
-    plausible = F.when(ingested_at > F.lit(min_epoch), ingested_at)
+    (after 2020-01-01 and before 2100-01-01), else the Kafka timestamp,
+    else NULL. Epoch seconds as double. NaN and ±Infinity are not
+    believable: Spark orders NaN above every other value, so the upper
+    bound rejects it along with +Infinity. A pure function of the row — no
+    "now" — so a projection built from it is the same expression in every
+    query execution."""
+    plausible = F.when(
+        (ingested_at > F.lit(min_epoch)) & (ingested_at < F.lit(MAX_VALID_EPOCH)),
+        ingested_at,
+    )
     return F.coalesce(plausible, F.unix_timestamp(kafka_ts).cast("double"))
 
 
@@ -118,8 +129,9 @@ def repair_ingested_at(
 ) -> Column:
     """Timestamp repair chain (reference: validate_json.py:73-84).
 
-    Keep ``ingested_at`` if it is a believable epoch (> 2020-01-01);
-    otherwise fall back to the Kafka timestamp; otherwise "now".
+    Keep ``ingested_at`` if it is a believable epoch (after 2020-01-01,
+    before 2100-01-01); otherwise fall back to the Kafka timestamp;
+    otherwise "now".
     Returns epoch seconds as double.
     """
     return F.coalesce(plausible_or_kafka_epoch(ingested_at, kafka_ts, min_epoch), now_epoch())

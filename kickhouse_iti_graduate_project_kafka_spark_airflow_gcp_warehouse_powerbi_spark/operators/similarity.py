@@ -23,6 +23,11 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import dot, norm
 
+#: most query rows the Arrow arm of :func:`brute_force_topk` collects on the
+#: driver and broadcasts; a larger query set takes the broadcast-join arm
+#: (the bound of plans.llm_vectors.BRUTE_GATE_MAX_VECS)
+ARROW_MAX_QUERIES = 20_000
+
 
 def _integral_id(df: DataFrame, id_col: str) -> bool:
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
@@ -53,9 +58,12 @@ def brute_force_topk(
     assignment) becomes BLAS. Each batch's partial top-k is a superset of
     the global top-k, and ties break (cos desc, n_id asc) in both the
     kernel and the window, so results equal the join path's. Non-integral
-    ids keep the broadcast-join path."""
+    ids, and query sets above :data:`ARROW_MAX_QUERIES` rows, keep the
+    broadcast-join path."""
     if _integral_id(corpus, id_col) and _integral_id(queries, id_col):
-        return _brute_force_topk_arrow(corpus, queries, k, id_col, vec_col)
+        out = _brute_force_topk_arrow(corpus, queries, k, id_col, vec_col)
+        if out is not None:
+            return out
     # norms are precomputed per vector, not per pair: each pair then costs
     # one dot product (one array traversal instead of three)
     q = queries.select(
@@ -90,11 +98,13 @@ def _brute_force_topk_arrow(
     k: int,
     id_col: str,
     vec_col: str,
-) -> DataFrame:
+) -> DataFrame | None:
     """Arrow fast path of :func:`brute_force_topk` (see its docstring).
     Semantics replicated exactly: NULL vectors/ids on either side drop
     out (the join path's NULL condition/try_divide behavior), zero-norm
-    pairs score NULL and drop, self-pairs are excluded."""
+    pairs score NULL and drop, self-pairs are excluded. Collects at most
+    ``ARROW_MAX_QUERIES + 1`` query rows and returns None when there are
+    more."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -103,8 +113,11 @@ def _brute_force_topk_arrow(
         queries.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
         .filter(F.col("_v").isNotNull() & F.col("_id").isNotNull())
         .orderBy("_id")
+        .limit(ARROW_MAX_QUERIES + 1)
         .collect()
     )
+    if len(rows) > ARROW_MAX_QUERIES:
+        return None
     q_ids = np.asarray([r["_id"] for r in rows], dtype="int64")
     qm = np.asarray([np.asarray(r["_v"], dtype="float64") for r in rows])
     q_nrm = np.sqrt((qm * qm).sum(axis=1)) if len(rows) else np.zeros(0)

@@ -9,6 +9,29 @@ cluster.
 
 Session timezone is pinned to UTC so event-time semantics are stable and
 results are comparable with the DuckDB oracle (naive timestamps).
+
+Streaming checkpoints (offset log, commit log, source log, state-store
+deltas) are committed through ``FileSystemBasedCheckpointFileManager``
+instead of Spark's default ``FileContextBasedCheckpointFileManager``. Both
+write a temp file and rename it into place; the files and their ``.crc``
+sidecars are the same bytes, only the rename call differs. The default
+manager's ``FileContext.rename`` checks the destination with
+``getFileLinkStatus``, which on local disk without Hadoop's native library
+starts a ``stat``/``readlink`` child process per call — hundreds per
+micro-batch, growing with the state partition count. The file-system
+manager's local rename is ``java.io.File.renameTo``, one POSIX
+``rename(2)``. It is as safe:
+
+- on local disk the default manager also checks the destination and then
+  renames, so both have the same window between check and rename;
+- on HDFS ``FileSystem.rename`` is atomic and refuses to overwrite, so a
+  second writer of an offsets or commits file still fails;
+- on object stores neither manager renames atomically, and on ``gs://``
+  Spark already falls back to this manager when no ``AbstractFileSystem``
+  is bound for the scheme.
+
+A vanilla session keeps Spark's default manager; checkpoints move freely
+between the two, since the files are the same.
 """
 
 from __future__ import annotations
@@ -18,6 +41,13 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+#: the checkpoint manager every streaming query of a ``get_spark`` session
+#: commits through (Spark 4.1 class path; see the module docstring)
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -62,6 +92,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.crossJoin.enabled", "true")
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
         # Shuffle files are deleted only when the driver GC collects the
         # shuffle dependency (ContextCleaner holds weak refs); Spark's
         # default periodic GC is 30 MINUTES, so a long-lived session

@@ -40,6 +40,7 @@ from ..functions.expressions import (
     sport_ok,
 )
 from ..schemas import HASH_EXCLUDE
+from ..sources.storage import io_for
 
 #: reference topic-subscription regex: everything under the namespace except
 #: our own validated/rejected mirrors (validate_json.py:545)
@@ -320,6 +321,18 @@ def validate_all_entities(
     return out.drop("entity")
 
 
+def _refuse_recovery(offsets: str) -> None:
+    """Raise ``ValueError`` when the offset log ``offsets`` holds entries:
+    the memory sink cannot resume the query that wrote them."""
+    io, path = io_for(offsets)
+    if io.isdir(path) and io.list_names(path):
+        raise ValueError(
+            f"{offsets} already holds batches of an earlier run, and a memory "
+            "sink cannot recover from a checkpoint: start on a fresh "
+            f"checkpoint root or delete {offsets}"
+        )
+
+
 def start_validated_rejected_sinks(
     routed: DataFrame,
     checkpoint_root: str,
@@ -337,15 +350,21 @@ def start_validated_rejected_sinks(
     memory table ``<prefix>_routed`` (``prefix`` = ``memory_prefix``, else
     ``route``); ``<prefix>_validated`` and ``<prefix>_rejected`` are temp
     views over it, split on the topic prefix, with columns (topic, key,
-    value, payload_sha, evt_ts).
+    value, payload_sha, evt_ts). A memory sink cannot recover from a
+    checkpoint, so this mode starts only on a fresh ``checkpoint_root``:
+    when ``<checkpoint_root>/routed/offsets`` already holds entries it
+    raises ``ValueError`` before the query starts.
 
     Returns the one query in a list."""
     prefix = memory_prefix or "route"
+    checkpoint = f"{checkpoint_root}/routed"
+    if not kafka_bootstrap:
+        _refuse_recovery(f"{checkpoint}/offsets")
     writer = (
         routed.drop("is_valid", "parse_ok")
         .writeStream.outputMode("append")
         .trigger(processingTime=trigger)
-        .option("checkpointLocation", f"{checkpoint_root}/routed")
+        .option("checkpointLocation", checkpoint)
         .queryName(f"{prefix}_routed")
     )
     if kafka_bootstrap:

@@ -139,3 +139,48 @@ def test_plausible_or_kafka_epoch_has_no_now_link(spark):
         plausible_or_kafka_epoch(F.col("ing"), F.to_timestamp("kts")).alias("p")
     ).collect()
     assert [r["p"] for r in out] == [1767225600.0, 1767225600.0, None]
+
+
+#: ingested_at values above the plausible range, as JSON text: each made
+#: from_unixtime overflow (CAST_OVERFLOW) or land ~120 000 years ahead
+OUT_OF_RANGE_INGESTED_AT = ["1e20", '"NaN"', '"Infinity"', "1e15", "4.2e9"]
+
+
+def test_plausible_or_kafka_epoch_rejects_far_future_nan_and_infinity(spark):
+    """P6 upper bound: epochs from 2100-01-01 on, NaN and ±Infinity fall
+    back to the Kafka timestamp like a too-small epoch does; a believable
+    epoch is still kept."""
+    inf = float("inf")
+    df = spark.createDataFrame(
+        [(v, "2026-01-01 00:00:00")
+         for v in (1e20, float("nan"), inf, -inf, 1e15, 4.2e9, 1767225660.0)],
+        "ing double, kts string",
+    )
+    out = df.select(
+        plausible_or_kafka_epoch(F.col("ing"), F.to_timestamp("kts")).alias("p")
+    ).collect()
+    assert [r["p"] for r in out] == [1767225600.0] * 6 + [1767225660.0]
+
+
+def test_routing_survives_out_of_range_ingested_at(spark):
+    """One message with an out-of-range ingested_at no longer fails the
+    routed query: its evt_ts is the Kafka timestamp."""
+    from datetime import datetime
+
+    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.streaming.validate import (
+        validate_all_entities,
+    )
+
+    kafka_ts = datetime(2026, 1, 1)
+    msgs = spark.createDataFrame(
+        [
+            ("soccer.event", None,
+             f'{{"idEvent": "E{i}", "strSport": "Soccer", "ingested_at": {v}}}', kafka_ts)
+            for i, v in enumerate(OUT_OF_RANGE_INGESTED_AT)
+        ],
+        "topic string, key string, value string, timestamp timestamp",
+    )
+    rows = validate_all_entities(msgs).select("key", "evt_ts").collect()
+    assert {r["key"]: r["evt_ts"] for r in rows} == {
+        f"E{i}": kafka_ts for i in range(len(OUT_OF_RANGE_INGESTED_AT))
+    }

@@ -1310,3 +1310,30 @@ def test_sample_is_cluster_preserving(spark):
     for d in kept_set:
         twin = d + 1000 if d < 1000 else d - 1000
         assert twin in kept_set, (d, twin)
+
+
+def test_brute_force_topk_large_query_set_takes_join_arm(spark, sf_small, monkeypatch):
+    """Above ARROW_MAX_QUERIES query rows the Arrow arm collects no query
+    matrix and the broadcast-join arm answers; both arms return the same
+    top-k."""
+    from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.operators import (
+        similarity,
+    )
+
+    emb = load_table(spark, sf_small, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 6)
+
+    def topk():
+        out = brute_force_topk(emb, queries, k=5)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        rows = {(r["q_id"], r["rank"]): (r["n_id"], r["cos"]) for r in out.collect()}
+        return rows, "MapInPandas" in plan
+
+    arrow, arrow_used = topk()
+    monkeypatch.setattr(similarity, "ARROW_MAX_QUERIES", 5)
+    joined, join_arrow_used = topk()
+    assert arrow_used and not join_arrow_used
+    assert arrow.keys() == joined.keys() and len(arrow) == 6 * 5
+    for key, (n_id, cos) in arrow.items():
+        assert joined[key][0] == n_id
+        assert abs(joined[key][1] - cos) < 1e-12
