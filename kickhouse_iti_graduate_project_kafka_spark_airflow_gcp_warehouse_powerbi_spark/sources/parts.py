@@ -12,16 +12,26 @@ the same contract:
 - **INSERT = new immutable part + atomic commit.** Data lands in its own
   ``parts/p-<uuid>`` directory, invisible until a *version file* commits it.
   A crash before commit leaves an orphan directory readers never see.
+- **One part layout.** Inserts, merges and mutations all write their
+  parts through ``_write_part``: partitioned tables hash-shuffle by the
+  partition column, unpartitioned ones range-shuffle by ``order_by`` (or,
+  when none is declared, the table key — ClickHouse's key IS an ORDER BY
+  prefix), then sort within; an unkeyed, unordered table keeps the input
+  partitioning. Every part is one sorted run with min/max-disjoint files.
 - **Version log with optimistic concurrency.** ``_versions/v<N>.json``
-  enumerates the live parts (with per-part sequence numbers). Commit =
-  create-exclusive of ``v<N+1>.json`` (``os.link`` locally /
+  enumerates the live parts (with per-part sequence numbers). Every
+  commit — insert, both OPTIMIZEs, mutation — goes through ``_commit``:
+  read the head version, build the next doc with the op's own conflict
+  rule, carry the transaction and content-dedup sets forward, and
+  create-exclusive ``v<N+1>.json`` (``os.link`` locally /
   ``FileSystem.rename`` on Hadoop — both atomic namespace ops); a racing
   committer loses cleanly, re-reads, and retries at ``N+2``. This is the
   same protocol Delta's HDFSLogStore uses for its ``_delta_log`` and the
   analogue of ClickHouse's single-replica part-commit.
 - **Replay-safe inserts.** An optional ``batch_id`` is recorded in the
   version log; a retried insert whose id is already committed is a no-op
-  (ClickHouse's insert-block dedup / Delta txnAppId).
+  (ClickHouse's insert-block dedup / Delta txnAppId). Every later commit
+  carries the ids, so a replay stays a no-op across merges and mutations.
 - **Merge-on-read FINAL.** ``engine="replacing"`` keeps, per key, the row
   with the MAX ``version_col`` — ClickHouse ReplacingMergeTree(ver)'s
   documented semantics: the version column dominates regardless of
@@ -85,9 +95,10 @@ from __future__ import annotations
 import json
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -263,6 +274,13 @@ def _read_version(io, base: str, n: int) -> dict:
     doc = json.loads(text)
     if not isinstance(doc, dict) or "parts" not in doc:
         raise RuntimeError(f"corrupt version file v{n}.json")
+    # tables written before app-id namespaces keep a flat ``batch_ids``
+    # list: it is the "" namespace. Normalized here, and only here, so
+    # every commit built from this doc carries those ids forward.
+    txns = doc.setdefault("txns", {})
+    legacy = doc.pop("batch_ids", None)
+    if legacy:
+        txns[""] = sorted(set(txns.get("", [])) | set(legacy))
     return doc
 
 
@@ -280,8 +298,7 @@ def table_history(path: str) -> list[dict]:
     out = []
     for n in _version_ids(io, base):
         doc = _read_version(io, base, n)
-        txns = doc.get("txns", {})
-        flat = sorted(set(doc.get("batch_ids", [])) | {b for v in txns.values() for b in v})
+        flat = sorted({b for v in doc["txns"].values() for b in v})
         out.append(
             {
                 "version": n,
@@ -292,6 +309,107 @@ def table_history(path: str) -> list[dict]:
             }
         )
     return out
+
+
+# ---------------------------------------------------------------------------
+# commit + part layout (shared by insert, optimize and mutate)
+# ---------------------------------------------------------------------------
+
+
+def _head(io, base: str) -> tuple[int, dict]:
+    """The latest version number and its doc (an empty doc at 0)."""
+    ids = _version_ids(io, base)
+    if not ids:
+        return 0, {"parts": [], "txns": {}}
+    return ids[-1], _read_version(io, base, ids[-1])
+
+
+def _by_seq(parts: list[dict]) -> list[dict]:
+    return sorted(parts, key=lambda q: (q["seq"], q["name"]))
+
+
+def _part_key(p: dict) -> tuple:
+    """A live part's identity for conflict checks: name + skip list."""
+    return p["name"], tuple(p.get("skip", []))
+
+
+def _commit(io, base: str, op: str, build: Callable[[dict], dict | None]) -> tuple[int, bool]:
+    """The one optimistic commit loop. ``build(cur)`` turns the head
+    version doc into the next doc's ``parts``/``collapsed`` (plus any
+    op-specific keys), raising when the op's own conflict rule fails, or
+    returns None to commit nothing (an insert whose id committed under
+    it). ``txns`` and ``content`` carry forward unless ``build`` returns
+    extended sets. A lost create-exclusive race re-reads and rebuilds —
+    part data is never rewritten. Returns (version, committed)."""
+    while True:
+        ver, cur = _head(io, base)
+        doc = build(cur)
+        if doc is None:
+            return ver, False
+        carried = {"txns": cur["txns"]}
+        if cur.get("content"):
+            carried["content"] = cur["content"]
+        doc = {"op": op, **carried, **doc}
+        if io.write_exclusive(join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(doc)):
+            return ver + 1, True
+
+
+def _write_part(df: DataFrame, io, base: str, meta: dict) -> str:
+    """Write ``df`` as a new, not yet committed part and return its name.
+
+    The one layout rule every insert, merge and mutation uses. ClickHouse's
+    table key IS an ORDER BY prefix, so a keyed engine with no explicit
+    ``order_by`` still sorts its parts by the key, which is what makes
+    FINAL's per-key collapse read clustered data. Partitioned tables
+    hash-shuffle by the partition column and sort within. Unpartitioned
+    ones range-shuffle on the sort key, then sort within: the part comes
+    out GLOBALLY sorted with min/max-disjoint files — real MergeTree part
+    semantics (every part is one sorted run), maximal row-group skipping
+    on the sort key, and AQE right-sizes the range partitions so file
+    count tracks data volume. Keeping the input partitioning instead
+    writes one output file PER SOURCE SPLIT: measured on the sf100 ladder,
+    the orders insert wrote ~1600 3 MB files per part and the ladder
+    exponent for insert+optimize went to 1.5 on small-file overhead alone.
+    Cost is one shuffle of the rows written — the sort ClickHouse also
+    pays at insert. Only an unkeyed, unordered, unpartitioned table keeps
+    the input partitioning (there is nothing to sort by)."""
+    name = f"p-{uuid.uuid4().hex}"
+    part_path = join(io, base, PARTS_DIR, name)
+    pcol = meta["partition_col"]
+    order_by = meta["order_by"] or meta["key_cols"]
+    if pcol:
+        df = df.repartition(F.col(pcol))
+        if order_by:
+            df = df.sortWithinPartitions(pcol, *order_by)
+        df.write.mode("error").partitionBy(pcol).parquet(part_path)
+    else:
+        if order_by:
+            df = df.repartitionByRange(*order_by).sortWithinPartitions(*order_by)
+        df.write.mode("error").parquet(part_path)
+    _write_projections(io, df.sparkSession, part_path, meta)
+    return name
+
+
+def _write_projections(io, spark: SparkSession, part_path: str, meta: dict) -> None:
+    """Materialize each declared projection INSIDE the part directory
+    (``_proj_<name>`` — the underscore prefix hides it from the base
+    part's file listing, the ``_delta_log`` convention). Written before
+    the version commit, so base rows and projection states become visible
+    ATOMICALLY — exactly ClickHouse's part-level projection contract.
+
+    States are computed from the JUST-WRITTEN part files, never from the
+    caller's DataFrame: re-executing the input plan could legally produce
+    different rows (rand()-derived columns, a re-fetched source), and the
+    states must agree with the exact base rows they commit with. A merged
+    or mutated part's states are likewise recomputed from its own rows —
+    append-engine merges only concatenate, so this equals merging the
+    input parts' projection states."""
+    if not meta.get("projections"):
+        return
+    written = spark.read.parquet(part_path)
+    for pname, spec in meta["projections"].items():
+        states = aggregate_states(written, spec["key_cols"], spec["agg_spec"])
+        states.write.mode("error").parquet(join(io, part_path, f"_proj_{pname}"))
 
 
 # ---------------------------------------------------------------------------
@@ -325,8 +443,9 @@ def insert_into_parts(
     """Append ``df`` as one new immutable part and commit it.
 
     Two-phase: (1) write the part directory (partitioned + sorted per the
-    table metadata — row-group min/max skipping stays selective inside
-    every part); (2) commit via create-exclusive of the next version file.
+    table metadata, :func:`_write_part` — row-group min/max skipping stays
+    selective inside every part); (2) commit via create-exclusive of the
+    next version file.
     A concurrent committer forces a re-read + retry — the part data is
     NOT rewritten, only the commit is re-attempted, so contention costs
     one small-file race per retry. A crash between the phases leaves an
@@ -350,28 +469,19 @@ def insert_into_parts(
     io, base = io_for(path)
     meta = _load_meta(io, base)
     app = app_id or ""
-
-    def _committed_ids(ver: int) -> set[int]:
-        if ver == 0:
-            return set()
-        doc = _read_version(io, base, ver)
-        txns = doc.get("txns")
-        if txns is None:  # legacy flat list = the "" namespace
-            return set(doc.get("batch_ids", [])) if app == "" else set()
-        return set(txns.get(app, []))
-
-    def _committed_content(ver: int) -> set[int]:
-        if ver == 0:
-            return set()
-        return set(_read_version(io, base, ver).get("content", []))
-
-    ver = current_version(path)
-    if batch_id is not None and batch_id in _committed_ids(ver):
-        return {"version": ver, "replayed": True, "part": None}
     fp: int | None = None
+
+    def replayed(cur: dict) -> bool:
+        return (batch_id is not None and batch_id in cur["txns"].get(app, [])) or (
+            fp is not None and fp in cur.get("content", [])
+        )
+
+    ver, cur = _head(io, base)
+    if replayed(cur):
+        return {"version": ver, "replayed": True, "part": None}
     if dedup_content:
         fp = content_fingerprint(df)
-        if fp in _committed_content(ver):
+        if replayed(cur):
             return {"version": ver, "replayed": True, "part": None}
 
     if ver == 0 and io.read_text(join(io, base, SCHEMA_META)) is None:
@@ -382,89 +492,23 @@ def insert_into_parts(
         # empty result for an empty table, it does not error
         io.write_swap(base, SCHEMA_META, df.schema.json())
 
-    part_name = f"p-{uuid.uuid4().hex}"
-    part_path = join(io, base, PARTS_DIR, part_name)
-    writer_df = df
-    pcol = meta["partition_col"]
-    # ClickHouse's table key IS an ORDER BY prefix: a keyed engine with no
-    # explicit order_by still lays its parts out sorted by the key, which
-    # is what makes FINAL's per-key collapse read clustered data
-    order_by = meta["order_by"] or meta["key_cols"]
-    if pcol:
-        writer_df = writer_df.repartition(F.col(pcol))
-        if order_by:
-            writer_df = writer_df.sortWithinPartitions(pcol, *order_by)
-        writer_df.write.mode("error").partitionBy(pcol).parquet(part_path)
-    elif order_by:
-        # Range-shuffle on the table's ORDER BY, then sort within: the
-        # part comes out GLOBALLY sorted with min/max-disjoint files —
-        # real MergeTree part semantics (every part is one sorted run),
-        # maximal row-group skipping on the sort key, and AQE right-sizes
-        # the range partitions so file count tracks data volume.
-        # Preserving the input partitioning here (the pre-r12 behavior)
-        # meant one output file PER SOURCE SPLIT: the sf100 ladder's
-        # orders insert wrote ~1600 3 MB files per part and the ladder
-        # exponent for insert+optimize went to 1.5 on small-file
-        # overhead alone. Cost is one shuffle of the insert batch —
-        # the sort ClickHouse also pays at insert.
-        writer_df = writer_df.repartitionByRange(*order_by).sortWithinPartitions(
-            *order_by
-        )
-        writer_df.write.mode("error").parquet(part_path)
-    else:
-        writer_df.write.mode("error").parquet(part_path)
-    _write_projections(io, df.sparkSession, part_path, meta)
+    part_name = _write_part(df, io, base, meta)
 
-    while True:
-        ver = current_version(path)
-        if batch_id is not None and batch_id in _committed_ids(ver):
-            # another writer committed our id while we wrote data: drop the
-            # duplicate part as an orphan (vacuum sweeps it) and back off
-            return {"version": ver, "replayed": True, "part": None}
-        if fp is not None and fp in _committed_content(ver):
-            return {"version": ver, "replayed": True, "part": None}
-        prev = _read_version(io, base, ver) if ver else {"parts": [], "txns": {}}
-        txns = {k: sorted(v) for k, v in prev.get("txns", {}).items()}
-        if prev.get("batch_ids"):  # migrate a legacy flat list
-            txns[""] = sorted(set(txns.get("", [])) | set(prev["batch_ids"]))
+    def build(cur: dict) -> dict | None:
+        if replayed(cur):
+            # another writer committed our id while we wrote data: the
+            # duplicate part stays an orphan (vacuum sweeps it)
+            return None
+        seq = 1 + max((p["seq"] for p in cur["parts"]), default=0)
+        doc = {"parts": cur["parts"] + [{"name": part_name, "seq": seq}], "collapsed": False}
         if batch_id is not None:
-            txns[app] = sorted(set(txns.get(app, [])) | {batch_id})
-        seq = 1 + max((p["seq"] for p in prev["parts"]), default=0)
-        doc = {
-            "op": "insert",
-            "parts": prev["parts"] + [{"name": part_name, "seq": seq}],
-            "txns": txns,
-            "collapsed": False,
-        }
-        content = set(prev.get("content", []))
+            doc["txns"] = {**cur["txns"], app: sorted({*cur["txns"].get(app, []), batch_id})}
         if fp is not None:
-            content.add(fp)
-        if content:
-            doc["content"] = sorted(content)
-        if io.write_exclusive(
-            join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(doc)
-        ):
-            return {"version": ver + 1, "replayed": False, "part": part_name}
-        # lost the race — re-read and retry the commit only
+            doc["content"] = sorted({*cur.get("content", []), fp})
+        return doc
 
-
-def _write_projections(io, spark: SparkSession, part_path: str, meta: dict) -> None:
-    """Materialize each declared projection INSIDE the part directory
-    (``_proj_<name>`` — the underscore prefix hides it from the base
-    part's file listing, the ``_delta_log`` convention). Written before
-    the version commit, so base rows and projection states become visible
-    ATOMICALLY — exactly ClickHouse's part-level projection contract.
-
-    States are computed from the JUST-WRITTEN part files, never from the
-    caller's DataFrame: re-executing the input plan could legally produce
-    different rows (rand()-derived columns, a re-fetched source), and the
-    states must agree with the exact base rows they commit with."""
-    if not meta.get("projections"):
-        return
-    written = spark.read.parquet(part_path)
-    for pname, spec in meta["projections"].items():
-        states = aggregate_states(written, spec["key_cols"], spec["agg_spec"])
-        states.write.mode("error").parquet(join(io, part_path, f"_proj_{pname}"))
+    ver, committed = _commit(io, base, "insert", build)
+    return {"version": ver, "replayed": not committed, "part": part_name if committed else None}
 
 
 # ---------------------------------------------------------------------------
@@ -472,39 +516,18 @@ def _write_projections(io, spark: SparkSession, part_path: str, meta: dict) -> N
 # ---------------------------------------------------------------------------
 
 
-def _unescape_partition(v: str) -> str:
-    """Decode a Hive-style partition directory value (``%XX`` escapes) —
-    the inverse of what Spark's ``partitionBy`` writer applies."""
-    from urllib.parse import unquote
-
-    return unquote(v)
-
-
-def _part_partitions(io, base: str, part_name: str, pcol: str) -> list[str]:
-    """The partition values physically present in a part directory —
-    one ``list_names`` metadata call, never a data scan."""
+def _partition_dirs(io, base: str, part_name: str, pcol: str) -> dict[str, str]:
+    """Partition value -> subdirectory path of one part — one
+    ``list_names`` metadata call, never a data scan. Values are decoded
+    from the directory names the Hive-style writer escapes (``:`` ->
+    ``%3A``), and paths are those ACTUAL names, never rebuilt from the
+    decoded values."""
     d = join(io, base, PARTS_DIR, part_name)
-    out = []
-    for name in io.list_names(d):
-        if name.startswith(f"{pcol}="):
-            out.append(_unescape_partition(name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def _live_partition_dirs(io, base: str, p: dict, pcol: str) -> list[str] | None:
-    """Subdirectory paths of part ``p`` still live under its ``skip``
-    list (partitions merged away by a partition-scoped OPTIMIZE), or
-    None when the part has no skip (read the whole directory)."""
-    skip = set(p.get("skip", []))
-    if not skip:
-        return None
-    d = join(io, base, PARTS_DIR, p["name"])
-    return [
-        join(io, d, name)
-        for name in io.list_names(d)
+    return {
+        unquote(name.split("=", 1)[1]): join(io, d, name)
+        for name in sorted(io.list_names(d))
         if name.startswith(f"{pcol}=")
-        and _unescape_partition(name.split("=", 1)[1]) not in skip
-    ]
+    }
 
 
 def _recorded_schema(io, base: str) -> T.StructType | None:
@@ -525,23 +548,28 @@ def _partition_type(io, base: str, pcol: str | None) -> T.DataType | None:
 
 def _read_part_df(
     spark: SparkSession, io, base: str, p: dict, pcol: str | None,
-    pcol_type: T.DataType | None,
+    pcol_type: T.DataType | None, only: set[str] | None = None,
 ):
-    """Read one live part, honoring its ``skip`` list by reading ONLY the
-    still-live partition subdirectories (a pure metadata restriction —
+    """Read one live part, honoring its ``skip`` list (and, for a
+    partition-scoped merge, the ``only`` partitions asked for) by reading
+    ONLY those partition subdirectories (a pure metadata restriction —
     ``basePath`` keeps the partition column; no filter, no scan of the
-    skipped data). Returns None when every partition is skipped (such
-    parts are normally dropped from the version doc at commit time).
+    other data). Returns None when no partition is left to read.
 
     Data columns keep the types the part was written with (merges widen
     sums; ``unionByName`` widens across parts). Only the partition
     column, whose type Spark infers from the directory names, is re-read
     as ``pcol_type`` when the inference differs: a string ``"202601"``
-    would otherwise come back as an integer."""
+    would otherwise come back as an integer, and ``"007"`` as ``7``."""
     d = join(io, base, PARTS_DIR, p["name"])
     paths, reader = [d], spark.read
-    if p.get("skip") and pcol:
-        paths = _live_partition_dirs(io, base, p, pcol)
+    skip = set(p.get("skip", []))
+    if pcol and (skip or only is not None):
+        paths = [
+            sub
+            for v, sub in _partition_dirs(io, base, p["name"], pcol).items()
+            if v not in skip and (only is None or v in only)
+        ]
         if not paths:
             return None
         reader = reader.option("basePath", d)
@@ -552,6 +580,26 @@ def _read_part_df(
         [T.StructField(f.name, pcol_type, f.nullable) if f.name == pcol else f for f in df.schema]
     )
     return reader.schema(schema).parquet(*paths)
+
+
+def _tagged_union(
+    spark: SparkSession, io, base: str, meta: dict, legs: list[tuple[dict, set[str] | None]]
+) -> DataFrame | None:
+    """Union of ``(part, only)`` legs in sequence order, each read by
+    :func:`_read_part_df` with the recorded partition type and tagged with
+    its commit sequence as ``_part_seq`` via a literal column — the union
+    stays a metadata operation; no data moves until a collapse's one key
+    shuffle. None when no leg has a partition left to read."""
+    pcol = meta.get("partition_col")
+    pcol_type = _partition_type(io, base, pcol)
+    df = None
+    for p, only in legs:
+        leg = _read_part_df(spark, io, base, p, pcol, pcol_type, only)
+        if leg is None:
+            continue
+        leg = leg.withColumn("_part_seq", F.lit(int(p["seq"])))
+        df = leg if df is None else df.unionByName(leg)
+    return df
 
 
 def read_parts(
@@ -593,8 +641,8 @@ def read_parts(
     if ver == 0:
         raise FileNotFoundError(f"parts table at {path} has no committed version")
     doc = _read_version(io, base, ver)
-    parts = doc["parts"]
-    if not parts:
+    df = _tagged_union(spark, io, base, meta, [(p, None) for p in _by_seq(doc["parts"])])
+    if df is None:
         # a legitimately empty table (full OPTIMIZE whose rows all
         # TTL-expired or pair-cancelled, or a mutation that deleted
         # everything) stays READABLE: hand back an empty frame with the
@@ -603,18 +651,6 @@ def read_parts(
         if schema is None:  # pre-schema-file table: can't conjure one
             raise FileNotFoundError(f"version {ver} of {path} is empty")
         return spark.createDataFrame([], schema)
-
-    legs = []
-    pcol = meta.get("partition_col")
-    pcol_type = _partition_type(io, base, pcol)
-    for p in sorted(parts, key=lambda q: q["seq"]):
-        leg = _read_part_df(spark, io, base, p, pcol, pcol_type)
-        if leg is None:
-            continue
-        legs.append(leg.withColumn("_part_seq", F.lit(int(p["seq"]))))
-    df = legs[0]
-    for leg in legs[1:]:
-        df = df.unionByName(leg)
     df = _apply_ttl(df, meta, as_of)
     df = _apply_sample(df, meta, sample_frac)
 
@@ -839,12 +875,51 @@ def aggregate_states(
     return df.groupBy(*key_cols).agg(*aggs)
 
 
+def _worth_merging(merge: list[dict], meta: dict, as_of: float | None) -> bool:
+    """Two or more inputs always merge; a lone part merges only when the
+    rewrite changes it (a keyed collapse, or a TTL sweep)."""
+    ttl_rewrite = as_of is not None and bool(meta.get("ttl_col"))
+    return len(merge) >= 2 or (
+        len(merge) == 1 and (meta["engine"] != "append" or ttl_rewrite)
+    )
+
+
+def _require_live(cur: dict, merge: list[dict]) -> None:
+    """Both OPTIMIZEs' conflict rule: every merge input must still be live
+    with an UNCHANGED skip list (no concurrent full or partition-scoped
+    optimize)."""
+    live = {_part_key(p) for p in cur["parts"]}
+    if not all(_part_key(p) in live for p in merge):
+        raise RuntimeError("concurrent optimize replaced the merge inputs; re-run")
+
+
+def _merge_write(
+    spark: SparkSession,
+    io,
+    base: str,
+    meta: dict,
+    legs: list[tuple[dict, set[str] | None]],
+    as_of: float | None,
+) -> str | None:
+    """The merge body both OPTIMIZEs share: tagged union of the legs, TTL,
+    engine collapse, one new part. Returns None when TTL expiry /
+    pair-cancellation consumed every row — the merge result is NO part at
+    all (ClickHouse drops fully-expired parts)."""
+    df = _tagged_union(spark, io, base, meta, legs)
+    if df is None:
+        return None
+    df = _apply_ttl(df, meta, as_of)
+    if meta["engine"] != "append":
+        df = _collapse(df, meta)
+    df = df.drop("_part_seq")
+    return None if df.isEmpty() else _write_part(df, io, base, meta)
+
+
 def optimize_parts(
     spark: SparkSession,
     path: str,
     *,
     max_seq: int | None = None,
-    target_files: int = 1,
     as_of: float | None = None,
 ) -> dict:
     """Merge the live parts with ``seq <= max_seq`` (default: all) into one
@@ -865,90 +940,30 @@ def optimize_parts(
     is caller-supplied so maintenance stays deterministic and testable."""
     io, base = io_for(path)
     meta = _load_meta(io, base)
-    ver = current_version(path)
+    ver, doc = _head(io, base)
     if ver == 0:
         return {"version": 0, "merged": 0}
-    doc = _read_version(io, base, ver)
-    parts = sorted(doc["parts"], key=lambda q: q["seq"])
-    merge = [p for p in parts if max_seq is None or p["seq"] <= max_seq]
-    ttl_rewrite = as_of is not None and bool(meta.get("ttl_col"))
-    if len(merge) < 2 and not (
-        len(merge) == 1 and (meta["engine"] != "append" or ttl_rewrite)
-    ):
+    merge = [p for p in _by_seq(doc["parts"]) if max_seq is None or p["seq"] <= max_seq]
+    if not _worth_merging(merge, meta, as_of):
         return {"version": ver, "merged": 0}
+    part_name = _merge_write(spark, io, base, meta, [(p, None) for p in merge], as_of)
+    merged = {p["name"] for p in merge}
 
-    legs = []
-    pcol = meta.get("partition_col")
-    pcol_type = _partition_type(io, base, pcol)
-    for p in merge:
-        leg = _read_part_df(spark, io, base, p, pcol, pcol_type)
-        if leg is not None:
-            legs.append(leg.withColumn("_part_seq", F.lit(int(p["seq"]))))
-    df = legs[0]
-    for leg in legs[1:]:
-        df = df.unionByName(leg)
-    df = _apply_ttl(df, meta, as_of)
-    if meta["engine"] != "append":
-        df = _collapse(df, meta)
-    df = df.drop("_part_seq")
-
-    part_name: str | None = f"p-{uuid.uuid4().hex}"
-    if df.isEmpty():
-        # TTL expiry / pair-cancellation consumed every row: the merge
-        # result is NO part at all (ClickHouse drops fully-expired parts)
-        part_name = None
-    else:
-        part_path = join(io, base, PARTS_DIR, part_name)
-        pcol = meta["partition_col"]
-        order_by = meta["order_by"]
-        if pcol:
-            df = df.repartition(F.col(pcol))
-            if order_by:
-                df = df.sortWithinPartitions(pcol, *order_by)
-            df.write.mode("error").partitionBy(pcol).parquet(part_path)
-        else:
-            df = df.coalesce(target_files)
-            if order_by:
-                df = df.sortWithinPartitions(*order_by)
-            df.write.mode("error").parquet(part_path)
-        # the merged part's projections are recomputed from the written
-        # merged rows — append-engine merges only concatenate, so this
-        # equals merging the input parts' projection states
-        _write_projections(io, spark, part_path, meta)
-
-    merged_seq = max(p["seq"] for p in merge)
-    while True:
-        ver = current_version(path)
-        cur = _read_version(io, base, ver)
-        cur_parts = sorted(cur["parts"], key=lambda q: q["seq"])
-        # the merge inputs must all still be live with UNCHANGED skip
-        # lists (no concurrent full or partition-scoped optimize)
-        live_keys = {(p["name"], tuple(p.get("skip", []))) for p in cur_parts}
-        if not all((p["name"], tuple(p.get("skip", []))) in live_keys for p in merge):
-            raise RuntimeError("concurrent optimize replaced the merge inputs; re-run")
-        survivors = [{"name": part_name, "seq": merged_seq}] if part_name else []
-        untouched = [
-            p for p in cur_parts if p["name"] not in {q["name"] for q in merge}
-        ]
-        new_parts = survivors + untouched
-        new_doc = {
-            "op": "optimize",
-            "parts": sorted(new_parts, key=lambda q: q["seq"]),
-            "txns": cur.get("txns", {}),
+    def build(cur: dict) -> dict:
+        _require_live(cur, merge)
+        untouched = [p for p in cur["parts"] if p["name"] not in merged]
+        survivors = [{"name": part_name, "seq": max(p["seq"] for p in merge)}] if part_name else []
+        return {
+            "parts": _by_seq(survivors + untouched),
             # collapsed ONLY when this merge consumed EVERY live part: a
             # single remaining part is not enough — if the merged output
             # vanished (all rows cancelled/expired), the lone survivor is
             # an UNMERGED part and FINAL must still collapse it
             "collapsed": meta["engine"] != "append" and not untouched,
         }
-        if cur.get("batch_ids"):
-            new_doc["batch_ids"] = cur["batch_ids"]
-        if cur.get("content"):
-            new_doc["content"] = cur["content"]
-        if io.write_exclusive(
-            join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(new_doc)
-        ):
-            return {"version": ver + 1, "merged": len(merge), "part": part_name}
+
+    ver, _ = _commit(io, base, "optimize", build)
+    return {"version": ver, "merged": len(merge), "part": part_name}
 
 
 def optimize_partitions(
@@ -972,7 +987,7 @@ def optimize_partitions(
     - the merged partitions are read from each live part via its
       partition SUBDIRECTORIES (pure metadata pruning), collapsed with
       the engine semantics, and written as one new part carrying the max
-      input sequence;
+      input sequence — the same merge body as :func:`optimize_parts`;
     - input parts are NOT rewritten — the version log records the merged
       values in their ``skip`` list, and every reader resolves a part as
       (directory minus skipped subdirectories); a part whose partitions
@@ -1001,107 +1016,46 @@ def optimize_partitions(
             "optimize_partitions is unsupported on tables with projections"
         )
     values = sorted({str(v) for v in partition_values})
-    if not values:
-        return {"version": current_version(path), "merged": 0, "partitions": []}
-    ver = current_version(path)
-    if ver == 0:
-        return {"version": 0, "merged": 0, "partitions": values}
-    doc = _read_version(io, base, ver)
-    parts = sorted(doc["parts"], key=lambda q: q["seq"])
-
-    # which live parts physically hold any of the chosen partitions?
-    holds: dict[str, set[str]] = {}
-    for p in parts:
-        live = set(_part_partitions(io, base, p["name"], pcol)) - set(
-            p.get("skip", [])
-        )
-        hit = live & set(values)
-        if hit:
-            holds[p["name"]] = hit
-    merge = [p for p in parts if p["name"] in holds]
-    ttl_rewrite = as_of is not None and bool(meta.get("ttl_col"))
-    if len(merge) < 2 and not (
-        len(merge) == 1 and (meta["engine"] != "append" or ttl_rewrite)
-    ):
+    ver, doc = _head(io, base)
+    if ver == 0 or not values:
         return {"version": ver, "merged": 0, "partitions": values}
 
-    legs = []
-    for p in merge:
-        d = join(io, base, PARTS_DIR, p["name"])
-        # resolve against the ACTUAL directory names (Hive-escaped by the
-        # writer — e.g. ':' -> '%3A') rather than rebuilding them from the
-        # unescaped values, mirroring _live_partition_dirs
-        subs = [
-            join(io, d, name)
-            for name in sorted(io.list_names(d))
-            if name.startswith(f"{pcol}=")
-            and _unescape_partition(name.split("=", 1)[1]) in holds[p["name"]]
-        ]
-        leg = spark.read.option("basePath", d).parquet(*subs)
-        legs.append(leg.withColumn("_part_seq", F.lit(int(p["seq"]))))
-    df = legs[0]
-    for leg in legs[1:]:
-        df = df.unionByName(leg)
-    df = _apply_ttl(df, meta, as_of)
-    if meta["engine"] != "append":
-        df = _collapse(df, meta)
-    df = df.drop("_part_seq")
+    # which live parts physically hold any of the chosen partitions?
+    present: dict[str, set[str]] = {}
+    holds: dict[str, set[str]] = {}
+    for p in doc["parts"]:
+        present[p["name"]] = set(_partition_dirs(io, base, p["name"], pcol))
+        hit = (present[p["name"]] - set(p.get("skip", []))) & set(values)
+        if hit:
+            holds[p["name"]] = hit
+    merge = [p for p in _by_seq(doc["parts"]) if p["name"] in holds]
+    if not _worth_merging(merge, meta, as_of):
+        return {"version": ver, "merged": 0, "partitions": values}
+    legs = [(p, holds[p["name"]]) for p in merge]
+    part_name = _merge_write(spark, io, base, meta, legs, as_of)
 
-    part_name: str | None = f"p-{uuid.uuid4().hex}"
-    if df.isEmpty():
-        part_name = None  # every row expired/cancelled: no output part
-    else:
-        part_path = join(io, base, PARTS_DIR, part_name)
-        w = df.repartition(F.col(pcol))
-        if meta["order_by"]:
-            w = w.sortWithinPartitions(pcol, *meta["order_by"])
-        w.write.mode("error").partitionBy(pcol).parquet(part_path)
-
-    merged_seq = max(p["seq"] for p in merge)
-    merged_names = set(holds)
-    while True:
-        ver = current_version(path)
-        cur = _read_version(io, base, ver)
-        cur_parts = sorted(cur["parts"], key=lambda q: q["seq"])
-        live_keys = {(p["name"], tuple(p.get("skip", []))) for p in cur_parts}
-        if not all((p["name"], tuple(p.get("skip", []))) in live_keys for p in merge):
-            raise RuntimeError("concurrent optimize replaced the merge inputs; re-run")
+    def build(cur: dict) -> dict:
+        _require_live(cur, merge)
         new_parts = []
-        for p in cur_parts:
-            if p["name"] not in merged_names:
-                new_parts.append(p)
-                continue
-            skip = sorted(set(p.get("skip", [])) | holds[p["name"]])
-            if set(skip) >= set(_part_partitions(io, base, p["name"], pcol)):
-                continue  # every partition merged away: drop the part
-            q = {k: v for k, v in p.items() if k != "skip"}
-            q["skip"] = skip
-            new_parts.append(q)
+        for p in cur["parts"]:
+            if p["name"] in holds:
+                p = {**p, "skip": sorted({*p.get("skip", []), *holds[p["name"]]})}
+                if set(p["skip"]) >= present[p["name"]]:
+                    continue  # every partition merged away: drop the part
+            new_parts.append(p)
         if part_name:
-            new_parts.append({"name": part_name, "seq": merged_seq})
-        new_doc = {
-            "op": "optimize-partition",
+            new_parts.append({"name": part_name, "seq": max(p["seq"] for p in merge)})
+        return {
             "partitions": values,
-            "parts": sorted(new_parts, key=lambda q: (q["seq"], q["name"])),
-            "txns": cur.get("txns", {}),
+            "parts": _by_seq(new_parts),
             # a collapsed table stays collapsed (the merge introduces no
             # duplicate keys); an uncollapsed one stays uncollapsed (cold
             # partitions still carry superseded versions)
             "collapsed": bool(cur.get("collapsed", False)),
         }
-        if cur.get("batch_ids"):
-            new_doc["batch_ids"] = cur["batch_ids"]
-        if cur.get("content"):
-            new_doc["content"] = cur["content"]
-        if io.write_exclusive(
-            join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(new_doc)
-        ):
-            return {
-                "version": ver + 1,
-                "merged": len(merge),
-                "part": part_name,
-                "partitions": values,
-            }
+
+    ver, _ = _commit(io, base, "optimize-partition", build)
+    return {"version": ver, "merged": len(merge), "part": part_name, "partitions": values}
 
 
 # ---------------------------------------------------------------------------
@@ -1247,21 +1201,18 @@ def mutate_parts(
             # updating identity/ordering columns would silently break the
             # engine's collapse invariants (ClickHouse rejects these too)
             raise ValueError(f"cannot UPDATE key/identity columns: {bad}")
-    ver = current_version(path)
+    ver, doc = _head(io, base)
     if ver == 0:
         return {"version": 0, "rewritten": 0, "dropped_parts": 0}
-    doc = _read_version(io, base, ver)
-    parts = sorted(doc["parts"], key=lambda q: q["seq"])
+    parts = _by_seq(doc["parts"])
 
     new_parts = []
-    rewritten = dropped = 0
-    pcol_type = _partition_type(io, base, meta.get("partition_col"))
+    pcol = meta.get("partition_col")
+    pcol_type = _partition_type(io, base, pcol)
     for p in parts:
-        df = _read_part_df(spark, io, base, p, meta.get("partition_col"), pcol_type)
-        if df is None:
-            dropped += 1
+        out = _read_part_df(spark, io, base, p, pcol, pcol_type)
+        if out is None:
             continue
-        out = df
         if delete_where:
             out = out.filter(f"NOT ({delete_where})")
         if delete_ids is not None:
@@ -1275,53 +1226,28 @@ def mutate_parts(
                     col,
                     F.when(F.expr(cond), F.expr(expr)).otherwise(F.col(col)),
                 )
-        if out.isEmpty():
-            dropped += 1
-            continue
-        part_name = f"p-{uuid.uuid4().hex}"
-        part_path = join(io, base, PARTS_DIR, part_name)
-        pcol = meta["partition_col"]
-        order_by = meta["order_by"]
-        if pcol:
-            w = out.repartition(F.col(pcol))
-            if order_by:
-                w = w.sortWithinPartitions(pcol, *order_by)
-            w.write.mode("error").partitionBy(pcol).parquet(part_path)
-        else:
-            if order_by:
-                out = out.sortWithinPartitions(*order_by)
-            out.write.mode("error").parquet(part_path)
-        _write_projections(io, spark, part_path, meta)
-        new_parts.append({"name": part_name, "seq": p["seq"]})
-        rewritten += 1
+        if not out.isEmpty():
+            new_parts.append({"name": _write_part(out, io, base, meta), "seq": p["seq"]})
 
-    while True:
-        ver = current_version(path)
-        cur = _read_version(io, base, ver)
-        cur_keys = {(p["name"], tuple(p.get("skip", []))) for p in cur["parts"]}
-        if cur_keys != {(p["name"], tuple(p.get("skip", []))) for p in parts}:
+    def build(cur: dict) -> dict:
+        if {_part_key(p) for p in cur["parts"]} != {_part_key(p) for p in parts}:
             raise RuntimeError(
                 "concurrent commit changed the live parts during the "
                 "mutation; re-run against the new version"
             )
-        new_doc = {
-            "op": "mutate",
-            "parts": sorted(new_parts, key=lambda q: q["seq"]),
-            "txns": cur.get("txns", {}),
+        return {
+            "parts": _by_seq(new_parts),
             # deletes/updates cannot introduce duplicate keys (identity
             # columns are update-protected), so collapsed-ness survives
             "collapsed": bool(cur.get("collapsed", False)),
         }
-        if cur.get("content"):
-            new_doc["content"] = cur["content"]
-        if io.write_exclusive(
-            join(io, base, VERSIONS_DIR), f"v{ver + 1}.json", json.dumps(new_doc)
-        ):
-            return {
-                "version": ver + 1,
-                "rewritten": rewritten,
-                "dropped_parts": dropped,
-            }
+
+    ver, _ = _commit(io, base, "mutate", build)
+    return {
+        "version": ver,
+        "rewritten": len(new_parts),
+        "dropped_parts": len(parts) - len(new_parts),
+    }
 
 
 # ---------------------------------------------------------------------------
@@ -1341,13 +1267,13 @@ def parts_stats(path: str, *, version: int | None = None) -> list[dict]:
         return []
     doc = _read_version(io, base, ver)
     out = []
-    for p in sorted(doc["parts"], key=lambda q: (q["seq"], q["name"])):
+    for p in _by_seq(doc["parts"]):
         skip = sorted(p.get("skip", []))
         if skip:
             # only the LIVE partition subdirectories count toward the
             # merge policy — the skipped ones were merged elsewhere
-            live = _live_partition_dirs(io, base, p, meta["partition_col"]) or []
-            sizes = [io.du(d) for d in live]
+            dirs = _partition_dirs(io, base, p["name"], meta["partition_col"])
+            sizes = [io.du(d) for v, d in dirs.items() if v not in skip]
             nbytes, nfiles = sum(s[0] for s in sizes), sum(s[1] for s in sizes)
         else:
             nbytes, nfiles = io.du(join(io, base, PARTS_DIR, p["name"]))
@@ -1375,17 +1301,10 @@ def partition_stats(path: str, *, version: int | None = None) -> list[dict]:
     acc: dict[str, dict] = {}
     for p in doc["parts"]:
         skip = set(p.get("skip", []))
-        d = join(io, base, PARTS_DIR, p["name"])
-        # du the ACTUAL directory names (Hive-escaped by the writer —
-        # ':' -> '%3A' etc.); reconstructing f"{pcol}={v}" from the
-        # unescaped value points at a directory that does not exist
-        for name in io.list_names(d):
-            if not name.startswith(f"{pcol}="):
-                continue
-            v = _unescape_partition(name.split("=", 1)[1])
+        for v, d in _partition_dirs(io, base, p["name"], pcol).items():
             if v in skip:
                 continue
-            nbytes, nfiles = io.du(join(io, d, name))
+            nbytes, nfiles = io.du(d)
             row = acc.setdefault(
                 v, {"partition": v, "n_parts": 0, "bytes": 0, "files": 0}
             )

@@ -33,13 +33,36 @@ micro-batch, so inserts to the parent alone never retrigger child rows
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.parts import aggregate_states, insert_into_parts
 from ..sources.storage import checkpoint_query_id
+
+
+def _sink(
+    stream: DataFrame,
+    path: str,
+    checkpoint: str,
+    trigger: str,
+    app_id: str | None,
+    to_part: Callable[[DataFrame], DataFrame],
+) -> StreamingQuery:
+    """The foreachBatch body both sinks share: each micro-batch, shaped by
+    ``to_part``, lands as one part under (app id, batch id)."""
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        app = app_id if app_id is not None else checkpoint_query_id(checkpoint)
+        insert_into_parts(to_part(batch_df), path, batch_id=int(batch_id), app_id=app or "")
+
+    return (
+        stream.writeStream.foreachBatch(_process)
+        .trigger(processingTime=trigger)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
 
 
 def parts_sink(
@@ -53,17 +76,7 @@ def parts_sink(
 
     The table must already exist (``create_parts_table``) — schema and
     engine are table properties, not stream properties."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        app = app_id if app_id is not None else checkpoint_query_id(checkpoint)
-        insert_into_parts(batch_df, path, batch_id=int(batch_id), app_id=app or "")
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .trigger(processingTime=trigger)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    return _sink(stream, path, checkpoint, trigger, app_id, lambda df: df)
 
 
 def aggregating_parts_sink(
@@ -89,15 +102,7 @@ def aggregating_parts_sink(
     never double-count a state (the additive hazard count-min has —
     heavy_stream.py — does not exist here). The stream must already be
     projected to the state-column shape (e.g. ``n=1, total=v, hi=v``)."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        app = app_id if app_id is not None else checkpoint_query_id(checkpoint)
-        states = aggregate_states(batch_df, key_cols, agg_spec)
-        insert_into_parts(states, path, batch_id=int(batch_id), app_id=app or "")
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .trigger(processingTime=trigger)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _sink(
+        stream, path, checkpoint, trigger, app_id,
+        lambda df: aggregate_states(df, key_cols, agg_spec),
     )

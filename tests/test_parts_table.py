@@ -343,8 +343,9 @@ def test_string_partition_column_round_trips_with_recorded_type(spark, tbl):
     """A partition column reads back with the type recorded at first
     insert, not the one Spark would infer from the directory names: a
     string "202601" stays a string (and "007" keeps its zeros) through
-    read_parts, a partial OPTIMIZE, a partition OPTIMIZE (whose merged-away
-    partitions the old parts skip-list) and a mutation."""
+    read_parts, a partial OPTIMIZE, partition OPTIMIZEs (whose merged-away
+    partitions the old parts skip-list; merging "007" itself must write it
+    back as "007", not as month=7) and a mutation."""
     P.create_parts_table(tbl, engine="append", partition_col="month")
 
     def rows(data):
@@ -366,6 +367,10 @@ def test_string_partition_column_round_trips_with_recorded_type(spark, tbl):
     P.insert_into_parts(rows([("e", "202602", 5)]), tbl)
     P.optimize_partitions(spark, tbl, ["202602"])
     want.append(("e", "202602", 5))
+    assert read() == want
+    P.insert_into_parts(rows([("f", "007", 6)]), tbl)
+    P.optimize_partitions(spark, tbl, ["007"])
+    want.append(("f", "007", 6))
     assert read() == want
     P.mutate_parts(spark, tbl, set_exprs={"v": "v * 10"}, update_where="id = 'a'")
     P.mutate_parts(spark, tbl, delete_where="month = '007'")
@@ -680,6 +685,41 @@ def test_insert_replay_guard_is_per_app(spark, tbl):
     r2 = P.insert_into_parts(_orders(spark, [(9, 9, "X", 9.0)]), tbl, batch_id=0, app_id="s1")
     assert r2["replayed"]
     assert P.read_parts(spark, tbl).count() == 2
+
+
+@pytest.mark.parametrize("op", ["insert", "optimize", "optimize_partitions", "mutate"])
+def test_replays_stay_noops_after_every_commit(spark, tbl, op):
+    """Every commit carries the dedup sets forward: after an insert, a
+    full or partition OPTIMIZE, or a mutation, a replayed (app, batch_id),
+    a replayed id from the pre-namespace flat ``batch_ids`` list and a
+    re-inserted ``dedup_content`` block all stay no-ops."""
+    P.create_parts_table(tbl, engine="append", partition_col="month")
+
+    def rows(data):
+        return spark.createDataFrame(data, "id string, month string, v int")
+
+    P.insert_into_parts(rows([("a", "m1", 1)]), tbl, batch_id=1, app_id="app")
+    P.insert_into_parts(rows([("b", "m1", 2)]), tbl, dedup_content=True)
+    P.insert_into_parts(rows([("c", "m1", 3)]), tbl, batch_id=0)
+    # rewrite the head as an older writer left it: the "" namespace as a
+    # flat batch_ids list next to the namespaced txns
+    head = os.path.join(tbl, P.VERSIONS_DIR, f"v{P.current_version(tbl)}.json")
+    doc = json.load(open(head))
+    doc["batch_ids"] = doc["txns"].pop("")
+    with open(head, "w") as f:
+        json.dump(doc, f)
+
+    {
+        "insert": lambda: P.insert_into_parts(rows([("d", "m2", 4)]), tbl),
+        "optimize": lambda: P.optimize_parts(spark, tbl),
+        "optimize_partitions": lambda: P.optimize_partitions(spark, tbl, ["m1"]),
+        "mutate": lambda: P.mutate_parts(spark, tbl, delete_where="id = 'none'"),
+    }[op]()
+    n = P.read_parts(spark, tbl).count()
+    assert P.insert_into_parts(rows([("a", "m1", 1)]), tbl, batch_id=1, app_id="app")["replayed"]
+    assert P.insert_into_parts(rows([("c", "m1", 3)]), tbl, batch_id=0)["replayed"]
+    assert P.insert_into_parts(rows([("b", "m1", 2)]), tbl, dedup_content=True)["replayed"]
+    assert P.read_parts(spark, tbl).count() == n
 
 
 def test_aggregating_parts_sink_is_a_streaming_mv(spark, tmpdir):
