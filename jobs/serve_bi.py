@@ -29,9 +29,13 @@ Endpoints:
 
 - ``GET  /health``   → ``{"ok": true}``
 - ``GET  /tables``   → registered view names
+- ``GET  /cache``    → the result cache's ``hit``/``miss``/``shared``/
+  ``bypass`` counts, the ``bytes`` it holds and its ``entries``.
 - ``POST /sql``      → body ``{"sql": "SELECT ...", "limit": 100}``;
   returns ``{"columns": [...], "rows": [[...]], "n_rows": N,
-  "truncated": bool}``.
+  "truncated": bool}``. NaN and ±Infinity doubles are encoded as
+  ``null``, as ClickHouse's JSON output does by default
+  (``output_format_json_quote_denormals=0``), so the body is strict JSON.
 - ``POST /sql.arrow`` → same request body; returns the result as an
   **Arrow IPC stream** (``application/vnd.apache.arrow.stream``) with
   ``n_rows``/``truncated`` in the schema metadata — the columnar wire
@@ -45,16 +49,50 @@ Endpoints:
   first-keyword check alone would allow) — or one of the metadata
   commands SHOW / DESCRIBE / EXPLAIN. Everything else is rejected with
   400 (read-only by construction, not by permissions).
+
+Result cache (the hot tier: every viewer of a report page sends the same
+visual queries over unchanged data). Each server keeps one
+:class:`ResultCache` for ``/sql`` and ``/sql.arrow``:
+
+- It stores the encoded response body. The key is the endpoint, the
+  effective row cap, the exact SQL text, a sha256 of the canonicalized
+  analyzed plan's text and output schema, the session time zone, and a
+  metadata-only fingerprint of every input: the size and mtime of each
+  file the plan's file relations list (subqueries included; read through
+  ``sources/storage.py``, so local and Hadoop paths both work) and the
+  ``current_version`` of each registered parts view.
+- The read-only check runs before any lookup, and the ``spark.sql``
+  DataFrame analyzed for the key is the one a miss executes.
+- Freshness: a new view definition changes the plan digest; a rewritten
+  file or a parts commit changes the fingerprint. The fingerprint is
+  taken again after execution and the result is stored only if it is
+  unchanged, so a commit racing the query leaves no entry behind.
+- Concurrent misses on one key share one Spark execution (single-flight).
+- Always bypassed: SHOW/DESCRIBE/EXPLAIN; plans Spark marks
+  non-deterministic (``rand()``, ``uuid()``); plans that read the clock or
+  the session (``current_timestamp()``, ``now()``, ``current_date()``, a
+  no-argument ``unix_timestamp()``, ``current_user()`` and kin), found by
+  the ``CURRENT_LIKE`` tree pattern Spark gives their expression classes,
+  so an alias such as ``curdate()`` is caught too; plans
+  with an input that has no file listing to fingerprint (an in-memory
+  DataFrame, ``VALUES``); and errors, which are never stored.
+- ``CACHE_BYTES`` bounds the bodies held; the least recently used go
+  first. Every ``/sql`` and ``/sql.arrow`` response carries
+  ``X-Cache: hit|miss|shared|bypass``.
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
+import hashlib
 import json
+import math
 import os
 import re
 import sys
 import threading
+from collections import OrderedDict
 from datetime import date, datetime
 from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -62,6 +100,14 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
+
+from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources.parts import (
+    current_version,
+    read_parts,
+)
+from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources.storage import (
+    file_stats,
+)
 
 _COMMENT_RE = re.compile(r"--[^\n]*|/\*.*?\*/", re.S)
 
@@ -183,36 +229,44 @@ def _json_default(v):
     return str(v)
 
 
-def run_sql(spark: SparkSession, sql: str, limit: int, max_rows: int) -> dict:
-    """Execute read-only SQL with the row cap pushed into the plan."""
-    _assert_read_only(spark, sql)
-    n = max(1, min(limit or max_rows, max_rows))
-    df = spark.sql(sql)
+def _finite(v):
+    """``v`` with every NaN/±Infinity float, however nested, as None."""
+    if isinstance(v, float):
+        return v if math.isfinite(v) else None
+    if isinstance(v, dict):
+        return {_finite(k): _finite(x) for k, x in v.items()}
+    if isinstance(v, (list, tuple)):
+        return [_finite(x) for x in v]
+    return v
+
+
+def _json_body(doc) -> bytes:
+    """Strict JSON: NaN and ±Infinity, which JSON has no literal for, are
+    encoded as null, as ClickHouse's JSON output does by default
+    (``output_format_json_quote_denormals=0``). Only a document that holds
+    one pays for the rewrite."""
+    try:
+        return json.dumps(doc, default=_json_default, allow_nan=False).encode()
+    except ValueError:
+        return json.dumps(_finite(doc), default=_json_default, allow_nan=False).encode()
+
+
+def _json_result(df, n: int) -> bytes:
     rows = df.limit(n + 1).collect()
-    truncated = len(rows) > n
-    return {
+    return _json_body({
         "columns": df.columns,
-        "rows": [[r[c] for c in df.columns] for r in rows[:n]],
+        "rows": [list(r) for r in rows[:n]],
         "n_rows": min(len(rows), n),
-        "truncated": truncated,
-    }
+        "truncated": len(rows) > n,
+    })
 
 
-def run_sql_arrow(spark: SparkSession, sql: str, limit: int, max_rows: int) -> bytes:
-    """Execute read-only SQL and serialize the result as an **Arrow IPC
-    stream** — the columnar wire format Spark Connect / ADBC / Flight
-    clients speak, and the honest high-throughput twin of the JSON
-    endpoint: the collect path is Arrow end to end (``df.toArrow``), so
-    wide numeric dashboards never pay per-value JSON encoding. Row cap
-    semantics match :func:`run_sql`; ``n_rows``/``truncated`` travel in
-    the stream's schema metadata."""
+def _arrow_result(df, n: int) -> bytes:
     import io
 
     import pyarrow as pa
 
-    _assert_read_only(spark, sql)
-    n = max(1, min(limit or max_rows, max_rows))
-    table = spark.sql(sql).limit(n + 1).toArrow()
+    table = df.limit(n + 1).toArrow()
     truncated = table.num_rows > n
     table = table.slice(0, n)
     table = table.replace_schema_metadata(
@@ -226,6 +280,209 @@ def run_sql_arrow(spark: SparkSession, sql: str, limit: int, max_rows: int) -> b
     with pa.ipc.new_stream(sink, table.schema) as writer:
         writer.write_table(table)
     return sink.getvalue()
+
+
+def _answer(spark, sql, limit, max_rows, cache, endpoint, encode) -> tuple[bytes, str]:
+    _assert_read_only(spark, sql)
+    n = max(1, min(limit or max_rows, max_rows))
+    df = spark.sql(sql)
+    if _first_keyword(sql) in _META_KEYWORDS:
+        body = encode(df, n)
+        cache.count("bypass")
+        return body, "bypass"
+    return cache.answer(df, (endpoint, n, sql), lambda: encode(df, n))
+
+
+def run_sql(
+    spark: SparkSession, sql: str, limit: int, max_rows: int, cache: ResultCache
+) -> tuple[bytes, str]:
+    """Execute read-only SQL with the row cap pushed into the plan.
+    Returns the JSON body and its ``X-Cache`` status; the answer may come
+    from ``cache``."""
+    return _answer(spark, sql, limit, max_rows, cache, "/sql", _json_result)
+
+
+def run_sql_arrow(
+    spark: SparkSession, sql: str, limit: int, max_rows: int, cache: ResultCache
+) -> tuple[bytes, str]:
+    """Execute read-only SQL and serialize the result as an **Arrow IPC
+    stream** — the columnar wire format Spark Connect / ADBC / Flight
+    clients speak, and the honest high-throughput twin of the JSON
+    endpoint: the collect path is Arrow end to end (``df.toArrow``), so
+    wide numeric dashboards never pay per-value JSON encoding. Row cap
+    semantics match :func:`run_sql`; ``n_rows``/``truncated`` travel in
+    the stream's schema metadata. Returns the stream and its ``X-Cache``
+    status."""
+    return _answer(spark, sql, limit, max_rows, cache, "/sql.arrow", _arrow_result)
+
+
+#: Bytes of response bodies one server's result cache holds; past it the
+#: least recently used entries are evicted.
+CACHE_BYTES = 128 << 20
+
+# Leaves whose rows the plan text itself fixes (a CTE reference's
+# definition is walked as a child of the plan).
+_PLAN_ONLY_LEAVES = frozenset({"OneRowRelation", "Range", "CTERelationRef"})
+# Plan text must not elide fields past the default of 25.
+_MAX_FIELDS = 2**31 - 1
+# A CTE's id comes from a session-wide counter, so it differs on every
+# analysis of the same SQL; the digest numbers them by first appearance.
+_CTE_ID_RE = re.compile(r"\b(CTERelation(?:Def|Ref)) (\d+)")
+
+
+@functools.cache
+def _current_like(jvm):
+    """Spark's ``CURRENT_LIKE`` tree pattern, looked up once per JVM."""
+    return jvm.org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE()
+
+
+def _canonical_text(jplan) -> str:
+    """The canonicalized analyzed plan as text, the same for every
+    analysis of the same statement over the same views."""
+    text = jplan.canonicalized().treeString(True, False, _MAX_FIELDS, False, False)
+    ids: dict[str, int] = {}
+    return _CTE_ID_RE.sub(lambda m: f"{m[1]} {ids.setdefault(m[2], len(ids))}", text)
+
+
+def _input_files(jplan) -> list[str] | None:
+    """Every file the file relations of an analyzed plan list, subqueries
+    included; None when an input has no file listing to fingerprint (an
+    in-memory DataFrame, ``VALUES``, a JDBC or v2 relation)."""
+    files: set[str] = set()
+    subs = jplan.subqueriesAll()
+    for plan in [jplan] + [subs.apply(i) for i in range(subs.size())]:
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            name = leaf.nodeName()
+            if name in _PLAN_ONLY_LEAVES:
+                continue
+            if name != "LogicalRelation":
+                return None
+            rel = leaf.relation()
+            if rel.getClass().getSimpleName() != "HadoopFsRelation":
+                return None
+            files.update(rel.inputFiles())
+    return sorted(files)
+
+
+class _Flight:
+    """One in-progress miss that concurrent requests for its key wait on."""
+
+    def __init__(self):
+        self.done = threading.Event()
+        self.body: bytes | None = None
+        self.error: BaseException | None = None
+
+
+class ResultCache:
+    """Per-server cache of encoded response bodies: keyed on the plan and
+    on a metadata-only fingerprint of its inputs, bounded by
+    ``CACHE_BYTES`` with LRU eviction, and single-flight on a miss. The
+    module docstring states the contract. ``parts_versions`` returns the
+    committed version of every parts view, read fresh."""
+
+    def __init__(self, spark: SparkSession, parts_versions=None):
+        self._spark = spark
+        self._parts_versions = parts_versions
+        self._budget = CACHE_BYTES
+        self._entries: OrderedDict[tuple, bytes] = OrderedDict()
+        self._flights: dict[tuple, _Flight] = {}
+        self._lock = threading.Lock()
+        self._bytes = 0
+        self._counts = dict.fromkeys(("hit", "miss", "shared", "bypass"), 0)
+
+    def stats(self) -> dict:
+        with self._lock:
+            return {**self._counts, "bytes": self._bytes, "entries": len(self._entries)}
+
+    def count(self, status: str) -> None:
+        with self._lock:
+            self._counts[status] += 1
+
+    def _fingerprint(self, files: list[str]) -> tuple:
+        versions = self._parts_versions() if self._parts_versions else ()
+        return versions, tuple(zip(files, file_stats(files)))
+
+    def _plan_key(self, df) -> tuple[tuple, list[str]] | None:
+        """(plan part of the key, input files), or None to bypass."""
+        jdf = getattr(df, "_jdf", None)
+        if jdf is None:  # no JVM plan to key on (Spark Connect)
+            return None
+        jplan = jdf.queryExecution().analyzed()
+        if not jplan.deterministic():
+            return None
+        # Functions Spark marks deterministic whose value still comes from
+        # the clock or the session (current_date/curdate, now, a no-argument
+        # unix_timestamp, current_user, current_timezone, ...) all carry
+        # the CURRENT_LIKE tree pattern, however they are spelled; the
+        # plan's pattern bits include its subqueries'.
+        if jplan.containsPattern(_current_like(df.sparkSession._jvm)):
+            return None
+        text = _canonical_text(jplan)
+        files = _input_files(jplan)
+        if files is None:
+            return None
+        # the canonical form drops output names, so the schema joins it
+        digest = hashlib.sha256((text + jplan.schema().json()).encode()).hexdigest()
+        return (digest, self._spark.conf.get("spark.sql.session.timeZone")), files
+
+    def answer(self, df, head: tuple, run) -> tuple[bytes, str]:
+        """The body for ``df`` under ``head`` (endpoint, row cap, SQL) and
+        its ``X-Cache`` status. ``run()`` encodes ``df``: it is called on a
+        bypass, and on a miss by the one request that leads the flight."""
+        found = self._plan_key(df)
+        if found is None:
+            body = run()
+            self.count("bypass")
+            return body, "bypass"
+        plan_key, files = found
+        fp = self._fingerprint(files)
+        key = (*head, *plan_key, fp)
+        with self._lock:
+            body = self._entries.get(key)
+            if body is not None:
+                self._entries.move_to_end(key)
+                self._counts["hit"] += 1
+                return body, "hit"
+            flight = self._flights.get(key)
+            if flight is not None:
+                leader = False
+            else:
+                leader, flight = True, _Flight()
+                self._flights[key] = flight
+        if not leader:
+            flight.done.wait()
+            if flight.error is not None:
+                raise flight.error
+            self.count("shared")
+            return flight.body, "shared"
+        unchanged = False
+        try:
+            flight.body = run()
+            unchanged = self._fingerprint(files) == fp
+        except BaseException as e:
+            flight.error = e
+            raise
+        finally:
+            with self._lock:
+                del self._flights[key]
+                if flight.error is None:
+                    self._counts["miss"] += 1
+                    if unchanged:
+                        self._store(key, flight.body)
+            flight.done.set()
+        return flight.body, "miss"
+
+    def _store(self, key: tuple, body: bytes) -> None:
+        """Insert under ``self._lock``, evicting the least recently used."""
+        if len(body) > self._budget:
+            return
+        self._entries[key] = body
+        self._bytes += len(body)
+        while self._bytes > self._budget:
+            _, old = self._entries.popitem(last=False)
+            self._bytes -= len(old)
 
 
 class _PartsViewRefresher:
@@ -245,11 +502,6 @@ class _PartsViewRefresher:
         self.refresh()  # fail loudly at startup on a bad path
 
     def refresh(self) -> None:
-        from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources.parts import (
-            current_version,
-            read_parts,
-        )
-
         with self._lock:
             for name, path in self._views.items():
                 ver = current_version(path)
@@ -257,6 +509,10 @@ class _PartsViewRefresher:
                     continue
                 read_parts(self._spark, path, final=True).createOrReplaceTempView(name)
                 self._built[name] = ver
+
+    def versions(self) -> tuple:
+        """(view, committed version) of every parts view, read fresh."""
+        return tuple((name, current_version(path)) for name, path in self._views.items())
 
 
 def make_server(
@@ -269,8 +525,10 @@ def make_server(
     """Build (but don't start) the HTTP server bound to ``host:port``
     (port 0 = ephemeral, read the chosen one from ``server_port``).
     ``parts_views`` maps view name → parts-table path; each is served as
-    a FINAL read re-resolved per query when the table's version advances."""
+    a FINAL read re-resolved per query when the table's version advances.
+    The server owns one :class:`ResultCache` for its lifetime."""
     refresher = _PartsViewRefresher(spark, parts_views) if parts_views else None
+    cache = ResultCache(spark, refresher.versions if refresher else None)
 
     def _is_stale_snapshot_error(e: Exception) -> bool:
         """A scan that raced a maintenance swap: the query plan resolved a
@@ -303,13 +561,17 @@ def make_server(
                 refresher.refresh()
 
     class Handler(BaseHTTPRequestHandler):
-        def _send(self, code: int, doc: dict) -> None:
-            body = json.dumps(doc, default=_json_default).encode()
+        def _reply(self, code: int, body: bytes, content_type: str, x_cache: str | None = None) -> None:
             self.send_response(code)
-            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Type", content_type)
             self.send_header("Content-Length", str(len(body)))
+            if x_cache is not None:
+                self.send_header("X-Cache", x_cache)
             self.end_headers()
             self.wfile.write(body)
+
+        def _send(self, code: int, doc: dict, x_cache: str | None = None) -> None:
+            self._reply(code, _json_body(doc), "application/json", x_cache)
 
         def do_GET(self):  # noqa: N802 (stdlib API)
             if self.path == "/health":
@@ -317,6 +579,8 @@ def make_server(
             elif self.path == "/tables":
                 names = [t.name for t in spark.catalog.listTables()]
                 self._send(200, {"tables": sorted(names)})
+            elif self.path == "/cache":
+                self._send(200, cache.stats())
             else:
                 self._send(404, {"error": "not found"})
 
@@ -324,6 +588,7 @@ def make_server(
             if self.path not in ("/sql", "/sql.arrow"):
                 self._send(404, {"error": "not found"})
                 return
+            arrow = self.path == "/sql.arrow"
             try:
                 length = int(self.headers.get("Content-Length", "0"))
                 req = json.loads(self.rfile.read(length) or b"{}")
@@ -331,28 +596,22 @@ def make_server(
                 limit = int(req.get("limit") or 0)
                 if refresher is not None:
                     refresher.refresh()
-                if self.path == "/sql.arrow":
-                    body = _with_snapshot_retry(
-                        lambda: run_sql_arrow(spark, sql, limit, max_rows)
-                    )
-                    self.send_response(200)
-                    self.send_header(
-                        "Content-Type", "application/vnd.apache.arrow.stream"
-                    )
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
-                else:
-                    self._send(
-                        200,
-                        _with_snapshot_retry(
-                            lambda: run_sql(spark, sql, limit, max_rows)
-                        ),
-                    )
+                run = run_sql_arrow if arrow else run_sql
+                body, status = _with_snapshot_retry(
+                    lambda: run(spark, sql, limit, max_rows, cache)
+                )
             except ValueError as e:
-                self._send(400, {"error": str(e)})
+                cache.count("bypass")
+                self._send(400, {"error": str(e)}, "bypass")
+                return
             except Exception as e:  # analysis errors etc. -> client, not stderr
-                self._send(400, {"error": type(e).__name__, "detail": str(e)[:500]})
+                cache.count("bypass")
+                self._send(
+                    400, {"error": type(e).__name__, "detail": str(e)[:500]}, "bypass"
+                )
+                return
+            content_type = "application/vnd.apache.arrow.stream" if arrow else "application/json"
+            self._reply(200, body, content_type, status)
 
         def log_message(self, *a):  # quiet: Spark owns stdout here
             pass

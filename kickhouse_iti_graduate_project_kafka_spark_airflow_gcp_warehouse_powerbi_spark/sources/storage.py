@@ -33,6 +33,7 @@ import os
 import posixpath
 import tempfile
 import uuid
+from urllib.parse import unquote, urlsplit
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
@@ -116,6 +117,15 @@ class LocalIO:
 
     def mtime(self, p: str) -> float:
         return os.path.getmtime(p)
+
+    def list_stats(self, d: str) -> dict[str, tuple[int, float]]:
+        """name → (bytes, mtime) of every entry of directory ``d``; empty
+        when it is absent."""
+        try:
+            with os.scandir(d) as it:
+                return {e.name: (e.stat().st_size, e.stat().st_mtime) for e in it}
+        except FileNotFoundError:
+            return {}
 
     def du(self, p: str) -> tuple[int, int]:
         """(bytes, files) under a path — the system.parts size probe."""
@@ -272,6 +282,21 @@ class HadoopIO:
     def mtime(self, p: str) -> float:
         return self._fs(p).getFileStatus(self._jpath(p)).getModificationTime() / 1000.0
 
+    def list_stats(self, d: str) -> dict[str, tuple[int, float]]:
+        """name → (bytes, mtime) of every entry of directory ``d``, from
+        one ``listStatus`` RPC; empty when it is absent."""
+        fs, jp = self._fs(d), self._jpath(d)
+        try:
+            statuses = fs.listStatus(jp)
+        except Py4JJavaError:
+            if not fs.exists(jp):
+                return {}
+            raise
+        return {
+            st.getPath().getName(): (int(st.getLen()), st.getModificationTime() / 1000.0)
+            for st in statuses
+        }
+
     def du(self, p: str) -> tuple[int, int]:
         """(bytes, files) under a path — one ``getContentSummary`` RPC."""
         cs = self._fs(p).getContentSummary(self._jpath(p))
@@ -314,6 +339,28 @@ def join(io, base: str, *parts: str) -> str:
     if isinstance(io, LocalIO):
         return os.path.join(base, *parts)
     return posixpath.join(base.rstrip("/"), *parts)
+
+
+def file_stats(uris) -> list[tuple[int, float] | None]:
+    """(bytes, mtime) of each file, None for an absent one: a
+    metadata-only fingerprint of what a scan would read. ``uris`` are
+    percent-encoded file URIs as Spark lists them (``inputFiles()``). Each
+    distinct parent directory is listed once, so a Hadoop store pays one
+    ``listStatus`` RPC per directory rather than one ``getFileStatus`` per
+    file; a ``file:`` URI is the driver's own filesystem and is listed
+    with ``os.scandir`` rather than over py4j."""
+    listings: dict[str, dict] = {}
+    out = []
+    for uri in uris:
+        d, _, name = uri.rpartition("/")
+        if d not in listings:
+            if d.startswith("file:"):
+                listings[d] = LocalIO().list_stats(unquote(urlsplit(d).path) or "/")
+            else:
+                io, q = io_for(unquote(d))
+                listings[d] = io.list_stats(q)
+        out.append(listings[d].get(unquote(name)))
+    return out
 
 
 def rmtree(path: str) -> None:

@@ -3,7 +3,11 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+#: The checkout these tests belong to, so a copy of the repository tests
+#: its own code and jobs rather than whatever sits at a fixed path.
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+JOBS_DIR = os.path.join(REPO_ROOT, "jobs")
+sys.path.insert(0, REPO_ROOT)
 
 # Two-tier suite (r12 verdict #2): the multi-minute soaks / subprocess
 # CLI drives / property sweeps outgrew the driver's pytest window

@@ -4,9 +4,6 @@ records, including the parsed=null tail-truncated form (r8 shipped one —
 its truncation started mid-line and silently ate the deltas report)."""
 
 import json
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import bench
 

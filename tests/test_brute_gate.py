@@ -6,15 +6,11 @@ cannot finish at sf10 (r11 sweep: 600 s timeouts at 200 k vectors) is
 not the plan you'd run at 100×.  The IVF/PQ tiers remain the scale
 path; the *_equals_bruteforce companions remain the full-probe proof."""
 
-import sys
-
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.plans import (  # noqa: E402
+from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.plans import (
     llm_vectors as LV,
 )
 

@@ -5,7 +5,9 @@ import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/jobs")
+from conftest import JOBS_DIR
+
+sys.path.insert(0, JOBS_DIR)
 
 from curate_corpus import curate  # noqa: E402
 

@@ -3,6 +3,7 @@ batch-vs-corpus operator exactly; parameters round-trip through meta;
 the job entrypoint drives build + classify."""
 
 import json
+import os
 import shutil
 import subprocess
 import sys
@@ -12,6 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import JOBS_DIR
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.operators.dedup import (
     build_dedup_index,
     incremental_dedup,
@@ -393,7 +395,7 @@ def test_ingest_gate_cli_both_modes(spark, sf_small, tmpdir):
         "doc_id long, text string",
     ).write.parquet(f"{tmpdir}/dsrc")
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/ingest_gate.py", "docs",
+        [sys.executable, os.path.join(JOBS_DIR, "ingest_gate.py"), "docs",
          "--source", f"{tmpdir}/dsrc", "--index", f"{tmpdir}/idx",
          "--checkpoint", f"{tmpdir}/dckpt", "--trigger", "1 seconds",
          "--drain"],
@@ -407,7 +409,7 @@ def test_ingest_gate_cli_both_modes(spark, sf_small, tmpdir):
     build_ivf_index(emb, f"{tmpdir}/ivf", n_cells=8, iters=2)
     emb.filter("vec_id < 30").write.parquet(f"{tmpdir}/esrc")
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/ingest_gate.py", "embeddings",
+        [sys.executable, os.path.join(JOBS_DIR, "ingest_gate.py"), "embeddings",
          "--source", f"{tmpdir}/esrc", "--survivors", f"{tmpdir}/surv",
          "--ivf", f"{tmpdir}/ivf", "--checkpoint", f"{tmpdir}/eckpt",
          "--tau", "0.4", "--trigger", "1 seconds", "--drain"],
@@ -421,7 +423,7 @@ def test_ingest_gate_cli_both_modes(spark, sf_small, tmpdir):
     )
     # cold start without --schema fails with guidance, not a stack trace
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/ingest_gate.py", "docs",
+        [sys.executable, os.path.join(JOBS_DIR, "ingest_gate.py"), "docs",
          "--source", f"{tmpdir}/nonexistent", "--index", f"{tmpdir}/idx",
          "--checkpoint", f"{tmpdir}/x", "--drain"],
         capture_output=True, text=True, timeout=300,
@@ -450,7 +452,7 @@ def test_ingest_gate_cli_quality_gate(spark, tmpdir):
         "doc_id long, text string",
     ).write.parquet(f"{tmpdir}/qsrc")
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/ingest_gate.py", "docs",
+        [sys.executable, os.path.join(JOBS_DIR, "ingest_gate.py"), "docs",
          "--source", f"{tmpdir}/qsrc", "--index", f"{tmpdir}/qidx",
          "--checkpoint", f"{tmpdir}/qckpt", "--trigger", "1 seconds",
          "--quality-gate", "--drain"],
@@ -464,7 +466,7 @@ def test_ingest_gate_cli_quality_gate(spark, tmpdir):
     assert 22 in ids and 21 not in ids and 20 not in ids
     # flag misuse fails fast, before JVM startup
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/ingest_gate.py", "embeddings",
+        [sys.executable, os.path.join(JOBS_DIR, "ingest_gate.py"), "embeddings",
          "--source", "x", "--survivors", "s", "--ivf", "i",
          "--checkpoint", "c", "--quality-gate"],
         capture_output=True, text=True, timeout=60,
@@ -589,7 +591,7 @@ def test_ingest_gate_cli_reconcile(spark, sf_small, tmpdir):
     build_ivf_index(emb, f"{tmpdir}/ivf", n_cells=8, iters=2)
     emb.filter("vec_id < 30").write.parquet(f"{tmpdir}/esrc")
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/ingest_gate.py", "embeddings",
+        [sys.executable, os.path.join(JOBS_DIR, "ingest_gate.py"), "embeddings",
          "--source", f"{tmpdir}/esrc", "--survivors", f"{tmpdir}/surv",
          "--ivf", f"{tmpdir}/ivf", "--tau", "0.4", "--reconcile"],
         capture_output=True, text=True, timeout=300,
@@ -600,7 +602,7 @@ def test_ingest_gate_cli_reconcile(spark, sf_small, tmpdir):
     assert spark.read.parquet(f"{tmpdir}/surv").count() == stats[0]["n_survivors"]
     # docs mode must refuse the flag
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/ingest_gate.py", "docs",
+        [sys.executable, os.path.join(JOBS_DIR, "ingest_gate.py"), "docs",
          "--source", f"{tmpdir}/esrc", "--index", f"{tmpdir}/ivf",
          "--reconcile"],
         capture_output=True, text=True, timeout=300,
@@ -621,7 +623,7 @@ def test_ingest_gate_cli_pipeline_mode(spark, sf_small, tmpdir):
     ).write.parquet(f"{tmpdir}/pesrc")
 
     base = [
-        sys.executable, "/root/repo/jobs/ingest_gate.py", "pipeline",
+        sys.executable, os.path.join(JOBS_DIR, "ingest_gate.py"), "pipeline",
         "--source", f"{tmpdir}/pdsrc", "--emb-source", f"{tmpdir}/pesrc",
         "--state", f"{tmpdir}/pstate", "--batch-id", "0",
     ]

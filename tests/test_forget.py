@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import JOBS_DIR
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.operators.bm25 import (
     bm25_topk_indexed,
     build_bm25_index,
@@ -255,7 +256,7 @@ def test_forget_cli(spark, sf_small, tmpdir):
     docs.filter("doc_id % 10 = 0").write.parquet(f"{tmpdir}/takedown")
 
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/forget.py",
+        [sys.executable, os.path.join(JOBS_DIR, "forget.py"),
          "--bm25", f"{tmpdir}/bm25", "--dedup", f"{tmpdir}/dedup",
          "--docs", f"{tmpdir}/takedown", "--vacuum"],
         capture_output=True, text=True, timeout=600,

@@ -7,6 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import JOBS_DIR
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.operators.ivf import (
     build_ivf_index,
     ivf_topk,
@@ -184,7 +185,7 @@ def test_index_health_cli(spark, sf_oracle, tmp_path):
     build_ivfpq_index(emb, path, n_cells=8, cell_iters=2, m=16, ks=64, pq_iters=4)
     emb.limit(50).write.parquet(str(tmp_path / "probe"))
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/index_health.py", "--path", path,
+        [sys.executable, os.path.join(JOBS_DIR, "index_health.py"), "--path", path,
          "--table", "codes", "--probe-batch", str(tmp_path / "probe")],
         capture_output=True, text=True, timeout=300,
     )
@@ -210,14 +211,14 @@ def test_ann_index_cli_append_mode(spark, sf_oracle, tmp_path):
     for layout, table in (("ivf", "vectors"), ("ivfpq", "codes")):
         path = str(tmp_path / f"cli_{layout}")
         out = subprocess.run(
-            [sys.executable, "/root/repo/jobs/ann_index.py", "build",
+            [sys.executable, os.path.join(JOBS_DIR, "ann_index.py"), "build",
              "--path", path, "--layout", layout, "--sf-dir", sf_oracle,
              "--n-cells", "8", "--iters", "2"],
             capture_output=True, text=True, timeout=300,
         )
         assert out.returncode == 0, out.stderr[-2000:]
         out = subprocess.run(
-            [sys.executable, "/root/repo/jobs/ann_index.py", "append",
+            [sys.executable, os.path.join(JOBS_DIR, "ann_index.py"), "append",
              "--path", path, "--layout", layout, "--sf-dir", sf_oracle,
              "--batch", str(tmp_path / "batch")],
             capture_output=True, text=True, timeout=300,

@@ -9,7 +9,9 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/jobs")
+from conftest import JOBS_DIR
+
+sys.path.insert(0, JOBS_DIR)
 
 from validate_stream import broker_reachable  # noqa: E402
 

@@ -17,14 +17,10 @@ order, ``array_join`` vs DuckDB ``string_agg``/``array_to_string``) before
 returning.
 """
 
-import sys
-
 import pytest
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-sys.path.insert(0, "/root/repo")
-
-from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.catalog import (  # noqa: E402
+from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.catalog import (
     load_all,
 )
 

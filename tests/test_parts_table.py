@@ -10,6 +10,7 @@ import uuid
 
 import pytest
 
+from conftest import JOBS_DIR
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources import (
     parts as P,
 )
@@ -896,7 +897,7 @@ def test_parts_table_cli_new_engine_flags(spark, tmpdir):
 
     def _run(*argv):
         out = subprocess.run(
-            [sys.executable, "/root/repo/jobs/parts_table.py", *argv],
+            [sys.executable, os.path.join(JOBS_DIR, "parts_table.py"), *argv],
             capture_output=True, text=True, timeout=600,
         )
         assert out.returncode == 0, out.stderr[-2000:]
@@ -1182,7 +1183,7 @@ def test_parts_table_cli_mutate(spark, tmpdir):
 
     def _run(*argv):
         out = subprocess.run(
-            [sys.executable, "/root/repo/jobs/parts_table.py", *argv],
+            [sys.executable, os.path.join(JOBS_DIR, "parts_table.py"), *argv],
             capture_output=True, text=True, timeout=600,
         )
         assert out.returncode == 0, out.stderr[-2000:]
@@ -1516,7 +1517,7 @@ def test_parts_table_cli_optimize_partitions(spark, tmpdir):
 
     def _run(*argv):
         out = subprocess.run(
-            [sys.executable, "/root/repo/jobs/parts_table.py", *argv],
+            [sys.executable, os.path.join(JOBS_DIR, "parts_table.py"), *argv],
             capture_output=True, text=True, timeout=600,
         )
         assert out.returncode == 0, out.stderr[-2000:]

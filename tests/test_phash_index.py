@@ -2,9 +2,12 @@
 absorb / replay / crash posture / forget / streaming gate — the
 multimodal twin of the text dedup-index lifecycle."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import JOBS_DIR
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.operators.phash_index import (
     absorb_batch_into_phash_index,
     build_phash_index,
@@ -158,7 +161,7 @@ def test_phash_gate_cli(spark, tmp_path):
     build_phash_index(_df(spark, [(1, H_A)]), path, n_bucket_dirs=8)
     _df(spark, [(10, H_A1), (11, H_B)]).write.parquet(src)
     out = subprocess.run(
-        [sys.executable, "/root/repo/jobs/ingest_gate.py", "phash",
+        [sys.executable, os.path.join(JOBS_DIR, "ingest_gate.py"), "phash",
          "--source", src, "--index", path,
          "--checkpoint", str(tmp_path / "ckpt"),
          "--trigger", "1 seconds", "--drain"],

@@ -5,6 +5,7 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
+from conftest import JOBS_DIR
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.operators.scd import (
     scd2_collapse,
 )
@@ -132,7 +133,7 @@ def test_backfill_cli(spark, tmp_path, monkeypatch):
     src = str(tmp_path / "events")
     dim = str(tmp_path / "dim")
     _frame(spark, ALL).write.parquet(src)
-    _sys.path.insert(0, "/root/repo/jobs")
+    _sys.path.insert(0, JOBS_DIR)
     import scd2_dim
 
     monkeypatch.setattr(

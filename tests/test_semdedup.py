@@ -5,6 +5,7 @@ determinism, and the survivors semi-join."""
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import JOBS_DIR
 from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.operators.semdedup import (
     semdedup,
     semdedup_survivors,
@@ -148,7 +149,7 @@ def test_semdedup_job_modes(spark, sf_oracle, tmp_path):
     """Job drive: survivors layout + incremental stats, reusing a
     persisted IVF quantizer so no mode refits k-means."""
     import sys
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, JOBS_DIR)
     from semdedup_corpus import run
     from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.operators.ivf import (
         build_ivf_index,

@@ -110,6 +110,32 @@ def test_backend_choice_by_scheme(spark, scheme_dir):
     assert isinstance(io, want) and path == d
 
 
+def test_file_stats_on_every_backend(spark, scheme_dir, monkeypatch):
+    """Size and mtime of each file as Spark lists it (percent-encoded), None
+    for a missing one, from one listing per parent directory; a ``file:``
+    URI reads the same local file without the Hadoop backend."""
+    d, local = scheme_dir
+    os.makedirs(os.path.join(local, "p=x y"))
+    for name in ("a b.bin", "c.bin", "p=x y/e.bin"):
+        with open(os.path.join(local, name), "wb") as f:
+            f.write(b"x" * 7)
+    st = os.stat(os.path.join(local, "a b.bin"))
+    uri = pathlib.Path(local, "a b.bin").as_uri()  # file:///.../a%20b.bin
+    listed = []
+    for cls in (S.LocalIO, S.HadoopIO):
+        def counted(self, q, _orig=cls.list_stats):
+            listed.append(q)
+            return _orig(self, q)
+        monkeypatch.setattr(cls, "list_stats", counted)
+    got = S.file_stats([
+        f"{d}/a%20b.bin", f"{d}/c.bin", f"{d}/missing", f"{d}/p=x%20y/e.bin",
+        f"{d}/nodir/f.bin", uri,
+    ])
+    assert [g and g[0] for g in got] == [7, 7, None, 7, None, 7]
+    assert abs(got[0][1] - st.st_mtime) < 1 and got[5][1] == st.st_mtime
+    assert len(listed) == 4  # d, d/p=x y, d/nodir and the file: URI's dir
+
+
 def test_write_swap_round_trip_leaves_no_temp_files(spark, scheme_dir):
     """Temp write + sync + atomic rename-overwrite: the second swap
     replaces the first in place and no ``.tmp`` litter survives."""

@@ -25,9 +25,11 @@ order-insensitive xxhash64 XOR over every output column.
     python tools/stream_soak.py --sf-dir .benchdata/sf1 --tag r11_sf1 \
         --kills 15,35
 
-Writes stream_soak_<tag>.json into ``--work-dir`` when one is given (the
-soak's tables, checkpoints and logs there are removed at the end), else
-into sweeps/:
+The soak's tables, checkpoints and logs live in its own ``soak_<tag>``
+subdirectory of ``--work-dir`` (default ``.benchdata/``), which it
+creates and removes; nothing else there is touched. The result
+stream_soak_<tag>.json is written beside that subdirectory, into
+``--work-dir`` when one is given, else into sweeps/:
     {"input_rows": N, "batches_committed": B, "kills": K, "restarts": K+1,
      "append_equal": true, "parts_equal": true, ...}
 """
@@ -111,7 +113,7 @@ def worker(args) -> int:
     spark = _session("kickhouse-soak-worker")
     src = args.events_dir or _events_path(args.sf_dir)
     schema = spark.read.parquet(src).schema
-    root = args.work_dir
+    root = args.soak_dir
 
     stream1 = (
         spark.readStream.schema(schema)
@@ -171,6 +173,19 @@ def _xor_hash(df) -> tuple[int, int]:
     return int(row["n"]), int(row["h"] or 0)
 
 
+def prepare_soak_dir(work_dir: str, tag: str) -> tuple[str, str]:
+    """Create the soak's own ``soak_<tag>`` scratch directory, empty, and
+    return it with the result JSON path beside it. Only that subdirectory
+    is emptied (and removed at the end), so any ``--work-dir``, even
+    ``.``, keeps what it already holds."""
+    parent = work_dir or os.path.join(REPO, ".benchdata")
+    out_dir = work_dir or os.path.join(REPO, "sweeps")
+    work = os.path.join(parent, f"soak_{tag}")
+    shutil.rmtree(work, ignore_errors=True)
+    os.makedirs(work)
+    return work, os.path.join(out_dir, f"stream_soak_{tag}.json")
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.path.join(REPO, ".benchdata", "sf1"))
@@ -184,10 +199,11 @@ def main() -> int:
     ap.add_argument(
         "--work-dir",
         default="",
-        help="scratch directory, emptied at start; receives the result JSON "
-        "(default: .benchdata/soak_<tag>, result into sweeps/)",
+        help="directory for the soak's soak_<tag> subdirectory and its "
+        "result JSON (default: .benchdata/soak_<tag>, result into sweeps/)",
     )
     ap.add_argument("--events-dir", default="", help=argparse.SUPPRESS)
+    ap.add_argument("--soak-dir", default="", help=argparse.SUPPRESS)
     ap.add_argument("--worker", action="store_true", help=argparse.SUPPRESS)
     args = ap.parse_args()
 
@@ -196,9 +212,7 @@ def main() -> int:
 
     src = _events_path(args.sf_dir)
 
-    work = args.work_dir or os.path.join(REPO, ".benchdata", f"soak_{args.tag}")
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(work, exist_ok=True)
+    work, result_path = prepare_soak_dir(args.work_dir, args.tag)
 
     # the parts tables must exist before the first insert
     from kickhouse_iti_graduate_project_kafka_spark_airflow_gcp_warehouse_powerbi_spark.sources.parts import (
@@ -225,7 +239,7 @@ def main() -> int:
     while True:
         cmd = [
             sys.executable, os.path.abspath(__file__),
-            "--worker", "--sf-dir", args.sf_dir, "--work-dir", work,
+            "--worker", "--sf-dir", args.sf_dir, "--soak-dir", work,
             "--events-dir", src,
         ]
         log = open(os.path.join(work, f"worker_{restarts}.log"), "w")
@@ -295,10 +309,8 @@ def main() -> int:
     }
     # drop the soak's tables, checkpoints and logs, then write the result
     shutil.rmtree(work, ignore_errors=True)
-    out_dir = args.work_dir or os.path.join(REPO, "sweeps")
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, f"stream_soak_{args.tag}.json")
-    with open(path, "w") as f:
+    os.makedirs(os.path.dirname(result_path), exist_ok=True)
+    with open(result_path, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print(json.dumps(out))
     return 0 if out["append_equal"] and out["parts_equal"] else 1
